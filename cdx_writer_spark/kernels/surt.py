@@ -62,6 +62,8 @@ _HEX_SET = frozenset(_HEX)
 
 
 def _unescape_once(s: bytes) -> bytes:
+    if b"%" not in s:
+        return s
     out = bytearray()
     i, n = 0, len(s)
     while i < n:
@@ -83,8 +85,13 @@ def _unescape_repeatedly(s: bytes) -> bytes:
         s = u
 
 
+_ESCAPED_RE = re.compile(rb"[\x00-\x20\x7f-\xff#%]")
+
+
 def _escape_once(s: bytes) -> bytes:
     """Percent-escape bytes <= 0x20, >= 0x7F, '#' and '%' (safe-browsing rule)."""
+    if _ESCAPED_RE.search(s) is None:
+        return s
     out = bytearray()
     for b in s:
         if b <= 0x20 or b >= 0x7F or b == 0x23 or b == 0x25:

@@ -10,9 +10,10 @@ pandas UDFs, so cheap native filters run first, SURVEY.md §4 item 2):
    split across all six, mirroring the reference's per-record precompute,
    cdx_writer.py:677-681)
 3. native column exprs: date (P3), sentinels, file name, S/V
-4. exclude filter (F3): `exists()` over a broadcast literal array for small
-   lists (no shuffle, whole-stage codegen), broadcast LEFT ANTI join for
-   big lists
+4. exclude flag (F3): lists that fit the driver are reduced there to a
+   prefix-free prober (operators/exclude.py), broadcast, and probed
+   inside the step-2 UDF on the urlkeys it just computed — no join, no
+   shuffle, no second Python stage; bigger lists take the range merge
 5. optional CDX line serialization: concat_ws + rstrip
 
 At 100 TB the only shuffle in this pipeline is the final (optional) sort —
@@ -23,6 +24,8 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+from .exclude import _prefix_flag_merge, driver_prober
 
 __all__ = ["cdx_fields", "cdx_lines", "date_expr", "FIELD_COLUMNS"]
 
@@ -50,11 +53,6 @@ _PY_FIELDS_SCHEMA = T.StructType([
 
 _ALPHA32 = "ABCDEFGHIJKLMNOPQRSTUVWXYZ234567"
 META_PARSE_LIMIT = 5 * 1024 * 1024
-
-# DataFrame exclude lists above this row count leave the broadcast
-# nested-loop prefix join (O(records x prefixes) compute) for the
-# range-partitioned ordered merge in operators/exclude.py
-BNLJ_MAX_PREFIXES = 1000
 
 
 def _b32_of_sha1_hex(hex_col: Column) -> Column:
@@ -104,12 +102,23 @@ def date_expr(col: Column) -> Column:
     )
 
 
-def _make_py_fields_udf(screenshot_mode: bool = False):
+def _struct_udf(fn, schema: T.StructType, probe):
+    """``fn`` as a struct Arrow UDF, plus ``excluded`` when it runs an
+    exclude ``probe``.  Nondeterministic so the optimizer never copies the
+    call into a filter pushed below it (``~excluded`` above all), which
+    ran a second ArrowEvalPython over the whole JVM field chain."""
+    if probe is not None:
+        schema = T.StructType(schema.fields
+                              + [T.StructField("excluded", T.BooleanType())])
+    return F.pandas_udf(schema)(fn).asNondeterministic()
+
+
+def _make_py_fields_udf(screenshot_mode: bool = False, probe=None):
     """Factory for the vectorized (Arrow-batched) byte-level CDX field UDF.
     One batch in, one struct-column batch out; regexes are compiled once per
     executor at kernel-module import.  ``screenshot_mode`` mirrors the
     reference's --screenshot-mode flag (cdx_writer.py:285-286,345-348,
-    447-448,613-615)."""
+    447-448,613-615).  ``probe``: as in _make_url_meta_udf."""
     def kernel(record_type: pd.Series, url_raw: pd.Series,
                content_type: pd.Series, payload: pd.Series,
                content_length_hdr: pd.Series, payload_digest: pd.Series,
@@ -149,11 +158,10 @@ def _make_py_fields_udf(screenshot_mode: bool = False):
             out["checksum"].append(K.get_new_style_checksum(rec, content))
             out["meta_flags"].append(
                 K.get_aif_meta_tags(rec, http_headers, meta))
+        if probe is not None:
+            out["excluded"] = probe.value(out["urlkey"])
         return pd.DataFrame(out)
-    return F.pandas_udf(_PY_FIELDS_SCHEMA)(kernel)
-
-
-_py_fields_udf = _make_py_fields_udf(False)
+    return _struct_udf(kernel, _PY_FIELDS_SCHEMA, probe)
 
 
 _PY_URL_SCHEMA = T.StructType([
@@ -164,64 +172,73 @@ _PY_URL_SCHEMA = T.StructType([
 ])
 
 
-@F.pandas_udf(_PY_URL_SCHEMA)
-def _py_url_meta_udf(record_type: pd.Series, url_raw: pd.Series,
-                     filename: pd.Series, meta_slice: pd.Series,
-                     x_robots: pd.Series, sfps: pd.Series,
-                     fab_hex: pd.Series) -> pd.DataFrame:
+def _make_url_meta_udf(probe=None):
     """The slim python side of the hot path: SURT/chardet url fields, the
     meta-robots scan, and hex->base32 of the JVM-computed sha1.  Everything
     byte-heavy (header/body split, sha1, status, mime) stays JVM-side —
-    this UDF receives only url bytes, a bounded html-head slice (already
-    NULL for pages with no <meta> tag at all — the JVM gate), and a
-    40-char digest, ~10x less Arrow transfer than shipping payloads.
+    this UDF receives only url bytes, a bounded html-head slice (NULL
+    for every row but a <=5 MB text/html response body — the JVM
+    ``_mgate``), and a 40-char digest, ~10x less Arrow transfer than
+    shipping payloads.
 
     Per-row work is inlined from kernels.fields get_massaged_url /
     get_original_url (same dispatch, minus a dataclass construction per
     row — measured ~1us/row across 10^7-row index runs), and the
     meta-flag assembly for sliceless rows is memoized on the raw
-    (x-robots, sfps) header pair, which is near-constant per crawl."""
-    import base64
+    (x-robots, sfps) header pair, which is near-constant per crawl.
 
-    from cdx_writer_spark.kernels import fields as K
-    from cdx_writer_spark.kernels.encdetect import to_unicode_like_reference
-    from cdx_writer_spark.kernels.surt import surt
+    ``probe``: a broadcast exclude.PrefixProber; the struct then gains
+    ``excluded`` (urlkey starts with an exclude prefix), decided per
+    batch here, so the exclude list costs no Python crossing of its own."""
+    def _py_url_meta_udf(record_type: pd.Series, url_raw: pd.Series,
+                         filename: pd.Series, meta_slice: pd.Series,
+                         x_robots: pd.Series, sfps: pd.Series,
+                         fab_hex: pd.Series) -> pd.DataFrame:
+        import base64
 
-    fake = K.FAKE_BUILD_VERSION
-    flag_cache: dict = {}
-    urlkeys, origs, flags, fabs = [], [], [], []
-    for rt, url, fn, ms, xr, sf, fh in zip(record_type, url_raw, filename,
-                                           meta_slice, x_robots, sfps,
-                                           fab_hex):
-        if rt == "warcinfo":
-            w = "warcinfo:/%s/%s" % (fn, fake)
-            urlkeys.append(w)
-            origs.append(w)
-        else:
-            b = bytes(url) if url is not None else b""
-            orig = (to_unicode_like_reference(b)
-                    .replace("\r", "%0D").replace("\n", "%0A")
-                    .replace("\x0c", "%0C").replace("\x00", "%00"))
-            origs.append(orig)
-            try:
-                urlkeys.append(surt(b))
-            except Exception:   # bare fallback mirrors cdx_writer.py:290
-                urlkeys.append(orig)
-        if ms is not None:
-            flags.append(K.aif_flags(K.meta_tags_from_html(bytes(ms)),
-                                     xr, sf))
-        else:
-            ck = (xr, sf)
-            v = flag_cache.get(ck)
-            if v is None:
-                v = K.aif_flags(None, xr, sf)
-                if len(flag_cache) < 4096:
-                    flag_cache[ck] = v
-            flags.append(v)
-        fabs.append(base64.b32encode(bytes.fromhex(fh)).decode("ascii")
-                    if fh is not None else None)
-    return pd.DataFrame({"urlkey": urlkeys, "original_url": origs,
-                         "meta_flags": flags, "checksum_fab": fabs})
+        from cdx_writer_spark.kernels import fields as K
+        from cdx_writer_spark.kernels.encdetect import to_unicode_like_reference
+        from cdx_writer_spark.kernels.surt import surt
+
+        fake = K.FAKE_BUILD_VERSION
+        flag_cache: dict = {}
+        urlkeys, origs, flags, fabs = [], [], [], []
+        for rt, url, fn, ms, xr, sf, fh in zip(record_type, url_raw,
+                                               filename, meta_slice,
+                                               x_robots, sfps, fab_hex):
+            if rt == "warcinfo":
+                w = "warcinfo:/%s/%s" % (fn, fake)
+                urlkeys.append(w)
+                origs.append(w)
+            else:
+                b = bytes(url) if url is not None else b""
+                orig = (to_unicode_like_reference(b)
+                        .replace("\r", "%0D").replace("\n", "%0A")
+                        .replace("\x0c", "%0C").replace("\x00", "%00"))
+                origs.append(orig)
+                try:
+                    urlkeys.append(surt(b))
+                except Exception:   # bare fallback mirrors cdx_writer.py:290
+                    urlkeys.append(orig)
+            if ms is not None:
+                flags.append(K.aif_flags(K.meta_tags_from_html(bytes(ms)),
+                                         xr, sf))
+            else:
+                ck = (xr, sf)
+                v = flag_cache.get(ck)
+                if v is None:
+                    v = K.aif_flags(None, xr, sf)
+                    if len(flag_cache) < 4096:
+                        flag_cache[ck] = v
+                flags.append(v)
+            fabs.append(base64.b32encode(bytes.fromhex(fh)).decode("ascii")
+                        if fh is not None else None)
+        out = {"urlkey": urlkeys, "original_url": origs,
+               "meta_flags": flags, "checksum_fab": fabs}
+        if probe is not None:
+            out["excluded"] = probe.value(urlkeys)
+        return pd.DataFrame(out)
+    return _struct_udf(_py_url_meta_udf, _PY_URL_SCHEMA, probe)
 
 
 def _jvm_fields(df: DataFrame) -> DataFrame:
@@ -423,11 +440,22 @@ def cdx_fields(records: DataFrame, *, all_records: bool = False,
                keep_excluded_flag: bool = False) -> DataFrame:
     """Project the warc_records envelope to the 11 CDX columns.
 
-    ``excludes``: list of SURT prefixes (small → broadcast literal array,
-    JVM-side `exists`) or a DataFrame with column ``prefix`` (big → broadcast
-    left-anti join).  With ``keep_excluded_flag`` the excluded rows are kept
-    with an ``excluded`` boolean (for stats parity, reference
-    cdx_writer.py:673-675)."""
+    ``excludes``: SURT prefixes, a list or a one-column DataFrame.  One
+    that fits the driver (exclude.driver_prober) is reduced there once,
+    broadcast, and probed inside the field UDF that computes the urlkey;
+    bigger lists take the range merge of operators/exclude.py.  With
+    ``keep_excluded_flag`` the excluded rows are kept with an
+    ``excluded`` boolean (stats parity, reference cdx_writer.py:673-675)."""
+    probe = merge = None
+    if excludes is not None:
+        prober = driver_prober(excludes)
+        if prober is None:
+            merge = (excludes if isinstance(excludes, DataFrame)
+                     else records.sparkSession.createDataFrame(
+                         [(p,) for p in excludes], "prefix string"))
+        elif len(prober):
+            probe = records.sparkSession.sparkContext.broadcast(prober)
+
     df = records
     if screenshot_mode:
         # screenshot WARCs keep only metadata records (cdx_writer.py:660-662)
@@ -444,7 +472,7 @@ def cdx_fields(records: DataFrame, *, all_records: bool = False,
 
     if screenshot_mode:
         # niche path: keep the reference-shaped all-python kernel
-        udf = _make_py_fields_udf(True)
+        udf = _make_py_fields_udf(True, probe)
         df = df.withColumn("_py", udf(
             "record_type", "url_raw", "content_type", "payload",
             "content_length_hdr", "payload_digest", "sfps", "filename"))
@@ -460,7 +488,7 @@ def cdx_fields(records: DataFrame, *, all_records: bool = False,
         status_c = F.col("_status")
         checksum_c = F.coalesce(F.col("_checksum_pre"),
                                 F.col("_py.checksum_fab"))
-        df = df.withColumn("_py", _py_url_meta_udf(
+        df = df.withColumn("_py", _make_url_meta_udf(probe)(
             "record_type", "url_raw", "filename", "_meta_slice",
             "_x_robots", "sfps", "_fab_hex"))
 
@@ -477,41 +505,14 @@ def cdx_fields(records: DataFrame, *, all_records: bool = False,
         F.col("offset").cast("string").alias("rec_offset"),
         F.col("filename").alias("warc_name"),
         F.col("record_idx"),
+        (F.col("_py.excluded") if probe is not None
+         else F.lit(False)).alias("excluded"),
     )
-
-    if excludes is not None:
-        if isinstance(excludes, DataFrame):
-            n_pfx = excludes.count()
-            if n_pfx > BNLJ_MAX_PREFIXES:
-                # big lists (full archive banlists, 10^5-10^6 prefixes):
-                # any nested-loop shape is O(records x prefixes) compute —
-                # use the range-partitioned ordered merge instead
-                # (operators/exclude.py): one shuffle, no per-prefix work
-                # per record
-                from .exclude import prefix_exclude_flag
-                df = prefix_exclude_flag(df, excludes, key="urlkey")
-                if not keep_excluded_flag:
-                    df = df.filter(~F.col("excluded")).drop("excluded")
-                return df
-            # moderate lists: collect to the driver (bounded by
-            # BNLJ_MAX_PREFIXES) and use the literal-array exists() path
-            # below — no join at all, and no duplicate output rows when
-            # prefixes overlap (a LEFT prefix join emits one row per
-            # matching prefix)
-            excludes = [r[0] for r in excludes.collect()]
-        if len(excludes) > 0:
-            # small lists: JVM-side exists() over a literal array — no join,
-            # no shuffle, stays inside whole-stage codegen
-            arr = F.array(*[F.lit(p) for p in excludes])
-            flag = F.exists(arr, lambda p: F.col("urlkey").startswith(p))
-            if keep_excluded_flag:
-                df = df.withColumn("excluded", flag)
-            else:
-                df = df.filter(~flag)
-        elif keep_excluded_flag:
-            df = df.withColumn("excluded", F.lit(False))
-    elif keep_excluded_flag:
-        df = df.withColumn("excluded", F.lit(False))
+    if merge is not None:
+        df = _prefix_flag_merge(df.drop("excluded"), merge, "urlkey",
+                                "excluded", None)
+    if not keep_excluded_flag:
+        df = df.filter(~F.col("excluded")).drop("excluded")
     return df
 
 

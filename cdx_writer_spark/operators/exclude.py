@@ -30,9 +30,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["prefix_exclude_flag", "prefix_exclude_anti"]
+__all__ = ["prefix_exclude_flag", "prefix_exclude_anti", "driver_prober",
+           "PrefixProber"]
 
 _K, _TAG = "_xk", "_is_prefix"
 
@@ -45,11 +47,10 @@ _K, _TAG = "_xk", "_is_prefix"
 # merge below remains the scale path.  ~25 B/prefix -> ~250 MB at the
 # cap, comparable to a routine broadcast-join build side.
 BROADCAST_MAX_PREFIXES = 10_000_000
-# plan-stats gate for the same decision without running a count() job:
-# the optimizer's sizeInBytes estimate of the prefix frame (the signal
-# Spark's own broadcast planning uses).  1 GiB estimated comfortably
-# covers 10^6-10^7 short prefixes and is far below what a 10^9-row
-# banlist estimates at.
+# byte bound on the same decision: the optimizer's sizeInBytes estimate
+# of the prefix frame (the signal Spark's own broadcast planning uses),
+# else the frame's measured bytes.  1 GiB comfortably covers 10^6-10^7
+# short prefixes and is far below what a 10^9-row banlist measures.
 BROADCAST_MAX_PREFIX_EST_BYTES = 1 << 30
 # fixed-width kernels (driver prefix-free matrices, the probe's padded
 # key matrix) cost rows x MAX length; a single long outlier line would
@@ -81,7 +82,6 @@ def _startswith_batch(keys: np.ndarray, gov: np.ndarray) -> np.ndarray:
     whole batch.  (Run-grouping with a vectorized startswith per run
     was also measured: slower than the zip loop even at 11 runs/200k
     rows — pandas per-run slicing overhead dominates.)"""
-    import pyarrow as pa
     import pyarrow.compute as pc
     ka = pa.array(keys, type=pa.string(), from_pandas=True)
     ga = pa.array(gov, type=pa.string(), from_pandas=True)
@@ -168,141 +168,135 @@ def _build_payload(raw) -> tuple:
         return ("obj", plist)
 
 
-def _prefix_flag_broadcast(records: DataFrame, prefixes: DataFrame,
-                           key: str, flag_col: str) -> DataFrame | None:
-    """Broadcast binary-search variant of the prefix flag.
+class PrefixProber:
+    """``key.startswith(p)`` for any ``p`` of a prefix-free list (built
+    from a ``_build_payload`` payload), decided per batch of keys.
 
-    The RAW prefix rows come to the driver in one Arrow transfer
-    (bounded by BROADCAST_MAX_PREFIXES; duplicates ride along — a
-    distinct() here measured 3-4s of extra shuffle per call at 860k
-    rows against a transfer saving that only pays on dup-heavy lists,
-    and the driver reduction collapses duplicates anyway) and are made
-    PREFIX-FREE there — the distributed prefix_free
-    machinery (its own range shuffle + carry collect) exists for lists
-    too big for one process, which this path by definition is not.
-    Prefix-freeness makes the largest prefix <= key in lexicographic
-    order the ONLY candidate match (the same lemma the merge path rests
-    on).  The sorted list is broadcast once; each record batch runs one
-    vectorized ``np.searchsorted`` (over a fixed-width bytes array —
-    memcmp, no per-row Python — whenever the data is pure ASCII, with an
-    object-array fallback otherwise) plus the existing pyarrow
-    startswith kernel.  The records side is never shuffled,
-    checkpointed or re-scanned.
+    Prefix-freeness makes the largest prefix <= key the ONLY candidate
+    match (the merge path's lemma), so one vectorized ``np.searchsorted``
+    per batch decides every key: memcmp over fixed-width bytes when the
+    data is pure ASCII, an exact object-array search otherwise.  The
+    bytes form holds the sorted list and its exclusive upper bounds
+    ``p + '\\x7f'`` as NumPy byte arrays, so a broadcast prober unpickles
+    as a memcpy (the same list as 10^6 str objects measured tens of
+    seconds of first-task unpickling across the worker pool)."""
 
-    Broadcast payload: two fixed-width NumPy byte arrays shipped as raw
-    buffers — the sorted prefix-free list and its per-entry exclusive
-    upper bound ``p + '\\x7f'`` (``key.startswith(p) <=> p <= key <
-    p+'\\x7f'`` for sub-DEL ASCII) — so worker-side deserialization is a
-    memcpy.  A broadcast of the same list as 10^6 Python str objects was
-    measured costing tens of seconds of first-task unpickling across the
-    worker pool.  Non-ASCII/NUL/DEL data (never SURT keys) falls back to
-    an exact object-array search per batch."""
-    spark = records.sparkSession
-    pcol = prefixes.columns[0]
-    # the limit BOUNDS the driver collect even when the size estimate
-    # lied low: at cap+1 rows we learn "too big" without having pulled
-    # an arbitrarily large frame first
-    raw = (prefixes.select(pcol).limit(BROADCAST_MAX_PREFIXES + 1)
-           .toPandas()[pcol])
-    if len(raw) > BROADCAST_MAX_PREFIXES:
-        return None          # size estimate lied; caller takes the merge
-    payload = _build_payload(raw)
-    del raw
-    if payload is None:
-        return None          # pathological entry lengths; merge path
-    bc = spark.sparkContext.broadcast(payload)
-    cols = records.columns
-    schema_df = records.withColumn(flag_col, F.lit(False))
-    out_schema = ", ".join(f"`{c}` {t}" for c, t in schema_df.dtypes)
-
-    key_i = cols.index(key)
-
-    def probe(batches):
-        import pyarrow as pa
-        p = bc.value
-        if p[0] == "bytes":
-            _, ab, adt, hb, hdt, n_pfx = p
-            pfx_b = np.frombuffer(ab, dtype=adt)
-            pfx_hi = np.frombuffer(hb, dtype=hdt)
-            pfx_obj = None
-            width = pfx_hi.dtype.itemsize
+    def __init__(self, payload: tuple):
+        if payload[0] == "bytes":
+            _, ab, adt, hb, hdt, _n = payload
+            self.pfx_b = np.frombuffer(ab, dtype=adt)
+            self.pfx_hi = np.frombuffer(hb, dtype=hdt)
+            self.pfx_obj = None
         else:
-            pfx_obj = np.array(p[1], dtype=object)
-            n_pfx = len(pfx_obj)
-            pfx_b = pfx_hi = None
-            width = 0
+            self.pfx_b = self.pfx_hi = None
+            self.pfx_obj = np.array(payload[1], dtype=object)
 
-        def decode_fallback():
-            nonlocal pfx_obj
-            if pfx_obj is None:
-                pfx_obj = np.array([b.decode("ascii") for b in pfx_b],
-                                   dtype=object)
-            return pfx_obj
+    def __len__(self) -> int:
+        return len(self.pfx_obj if self.pfx_b is None else self.pfx_b)
 
-        def flags_exact(karr) -> np.ndarray:
-            """Object-array path: exact for any data (non-ASCII, NUL/DEL,
-            nulls)."""
-            keys = karr.to_numpy(zero_copy_only=False)
-            flag = np.zeros(len(keys), dtype=bool)
-            mask = ~pd.isna(keys)
-            if mask.any():
-                po = decode_fallback()
-                ks = keys[mask]
-                idx = np.searchsorted(po, ks, side="right") - 1
-                gov = np.where(idx >= 0, po[np.clip(idx, 0, None)], None)
-                flag[mask] = _startswith_batch(ks, gov)
-            return flag
+    def __call__(self, keys) -> np.ndarray:
+        """Boolean flag per key of an Arrow string array (or a sequence
+        of str); null keys are never excluded."""
+        if not isinstance(keys, pa.Array):
+            keys = pa.array(keys, type=pa.string())
+        if not len(self) or not len(keys):
+            return np.zeros(len(keys), dtype=bool)
+        flag = self._flags_fast(keys)
+        return flag if flag is not None else self._flags_exact(keys)
 
-        def flags_fast(karr) -> "np.ndarray | None":
-            """memcpy path: the key column's raw UTF-8 buffer is padded
-            into ONE fixed-width byte matrix (no per-row objects), then
-            searchsorted + one vectorized compare against the broadcast
-            hi-bounds decide every row.  Returns None when a guard trips
-            (nulls, non-string offsets, any byte >= 0x7f)."""
-            if pfx_b is None or karr.null_count or width > MAX_FAST_PREFIX_LEN:
+    def _flags_exact(self, karr) -> np.ndarray:
+        """Object-array path: exact for any data (non-ASCII, NUL/DEL)."""
+        if self.pfx_obj is None:
+            self.pfx_obj = np.array([b.decode("ascii") for b in self.pfx_b],
+                                    dtype=object)
+        po = self.pfx_obj
+        keys = karr.to_numpy(zero_copy_only=False)
+        flag = np.zeros(len(keys), dtype=bool)
+        mask = ~pd.isna(keys)
+        if mask.any():
+            ks = keys[mask]
+            idx = np.searchsorted(po, ks, side="right") - 1
+            gov = np.where(idx >= 0, po[np.clip(idx, 0, None)], None)
+            flag[mask] = _startswith_batch(ks, gov)
+        return flag
+
+    def _flags_fast(self, karr) -> "np.ndarray | None":
+        """memcpy path: the key column's raw UTF-8 buffer is padded into
+        ONE fixed-width byte matrix (no per-row objects), then
+        searchsorted + one vectorized compare against the hi-bounds
+        decide every row.  Returns None when a guard trips (nulls,
+        non-string offsets, any byte >= 0x7f)."""
+        if self.pfx_b is None or karr.null_count:
+            return None
+        width = self.pfx_hi.dtype.itemsize     # <= MAX_FAST_PREFIX_LEN
+        if pa.types.is_string(karr.type):
+            off_dt = np.int32
+        elif pa.types.is_large_string(karr.type):
+            off_dt = np.int64
+        else:
+            return None
+        bufs = karr.buffers()
+        off = np.frombuffer(bufs[1], dtype=off_dt)[
+            karr.offset: karr.offset + len(karr) + 1]
+        data = np.frombuffer(bufs[2], dtype=np.uint8)
+        seg = data[off[0]: off[-1]]
+        if len(seg) and int(seg.max()) >= 0x7F:
+            return None
+        lens = np.diff(off)
+        cl = np.minimum(lens, width)    # truncation-safe: a fixed-width
+        # compare against entries of length <= width-1 is decided within
+        # the first width bytes (hi ends in \x7f, keys are sub-DEL)
+        out = np.zeros((len(karr), width), dtype=np.uint8)
+        pos = off[:-1, None] + np.arange(width)[None, :]
+        m = np.arange(width)[None, :] < cl[:, None]
+        out[m] = data[pos[m]]
+        ks_b = out.view(f"S{width}").ravel()
+        idx = np.searchsorted(self.pfx_b, ks_b, side="right") - 1
+        safe = np.clip(idx, 0, None)
+        return (idx >= 0) & (ks_b < self.pfx_hi[safe])
+
+
+def _size_estimate(df: DataFrame) -> int | None:
+    """The optimizer's sizeInBytes estimate of ``df`` (free — no job)."""
+    try:
+        return int(df._jdf.queryExecution()      # noqa: SLF001
+                   .optimizedPlan().stats().sizeInBytes())
+    except Exception:   # py4j surfaces any planner failure as its own type
+        return None
+
+
+def driver_prober(prefixes: list[str] | DataFrame) -> PrefixProber | None:
+    """The exclude list made prefix-free on the driver, as a prober to
+    broadcast — or None when it belongs on the range merge: more than
+    BROADCAST_MAX_PREFIXES rows or BROADCAST_MAX_PREFIX_EST_BYTES bytes,
+    or entries ``_build_payload`` rejects.
+
+    A frame's RAW rows come over in one Arrow transfer, duplicates and
+    all (a distinct() measured 3-4s of extra shuffle at 860k rows; the
+    reduction collapses them anyway).  A frame whose optimizer size
+    ESTIMATE is within the byte bound passes with no job; otherwise (no
+    estimate, or one above the bound — any RDD-backed frame reports
+    Long.MaxValue) ONE aggregate job measures its rows and bytes."""
+    if isinstance(prefixes, DataFrame):
+        pcol = prefixes.columns[0]
+        est = _size_estimate(prefixes)
+        if est is None or est > BROADCAST_MAX_PREFIX_EST_BYTES:
+            n, nbytes = prefixes.agg(
+                F.count(F.lit(1)),
+                F.coalesce(F.sum(F.octet_length(pcol)), F.lit(0))).first()
+            if (n > BROADCAST_MAX_PREFIXES
+                    or nbytes > BROADCAST_MAX_PREFIX_EST_BYTES):
                 return None
-            if pa.types.is_string(karr.type):
-                off_dt = np.int32
-            elif pa.types.is_large_string(karr.type):
-                off_dt = np.int64
-            else:
-                return None
-            bufs = karr.buffers()
-            off = np.frombuffer(bufs[1], dtype=off_dt)[
-                karr.offset: karr.offset + len(karr) + 1]
-            data = np.frombuffer(bufs[2], dtype=np.uint8)
-            seg = data[off[0]: off[-1]]
-            if len(seg) and int(seg.max()) >= 0x7F:
-                return None
-            lens = np.diff(off)
-            cl = np.minimum(lens, width)    # truncation-safe: a fixed-
-            # width compare against entries of length <= width-1 is
-            # decided within the first width bytes (hi ends in \x7f,
-            # keys are sub-DEL)
-            out = np.zeros((len(karr), width), dtype=np.uint8)
-            pos = off[:-1, None] + np.arange(width)[None, :]
-            m = np.arange(width)[None, :] < cl[:, None]
-            out[m] = data[pos[m]]
-            ks_b = out.view(f"S{width}").ravel()
-            idx = np.searchsorted(pfx_b, ks_b, side="right") - 1
-            safe = np.clip(idx, 0, None)
-            return (idx >= 0) & (ks_b < pfx_hi[safe])
-
-        for batch in batches:
-            karr = batch.column(key_i)
-            if isinstance(karr, pa.ChunkedArray):
-                karr = karr.combine_chunks()
-            if n_pfx and len(batch):
-                flag = flags_fast(karr)
-                if flag is None:
-                    flag = flags_exact(karr)
-            else:
-                flag = np.zeros(len(batch), dtype=bool)
-            yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [pa.array(flag, type=pa.bool_())],
-                names=cols + [flag_col])
-
-    return records.mapInArrow(probe, out_schema)
+        # the limit BOUNDS the collect even when the estimate lied low: at
+        # cap+1 rows we learn "too big" without pulling the whole frame
+        raw = (prefixes.select(pcol).limit(BROADCAST_MAX_PREFIXES + 1)
+               .toPandas()[pcol])
+    else:
+        raw = pd.Series(prefixes, dtype=object)
+    if len(raw) > BROADCAST_MAX_PREFIXES:
+        return None
+    payload = _build_payload(raw)
+    return None if payload is None else PrefixProber(payload)
 
 
 def prefix_exclude_flag(records: DataFrame, prefixes: DataFrame,
@@ -318,27 +312,32 @@ def prefix_exclude_flag(records: DataFrame, prefixes: DataFrame,
     util.free_checkpoint once the result materializes; batch callers may
     ignore it (the blocks are bounded by the input and die with the
     session)."""
-    # Small-enough lists take the broadcast binary-search path: the
-    # records side stays exactly where it was scanned — no range
-    # shuffle, no checkpoint, no boundary-carry metadata pass.  Gate on
-    # the optimizer's size ESTIMATE (free — no job): the same signal the
-    # planner's own broadcast decisions use.  An over-estimate only
-    # costs the merge path's extra shuffle; an under-estimate is bounded
-    # by the row cap re-checked after the driver collect.
-    try:
-        est = int(prefixes._jdf.queryExecution()      # noqa: SLF001
-                  .optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = None
-    if est is None:
-        small = prefixes.count() <= BROADCAST_MAX_PREFIXES
-    else:
-        small = est <= BROADCAST_MAX_PREFIX_EST_BYTES
-    if small:
-        flagged = _prefix_flag_broadcast(records, prefixes, key, flag_col)
-        if flagged is not None:
-            return flagged
+    # lists that fit the driver: the prober is broadcast once and runs
+    # per record batch in mapInArrow — the records side stays where it
+    # was scanned: no range shuffle, checkpoint or carry metadata pass
+    prober = driver_prober(prefixes)
+    if prober is None:
+        return _prefix_flag_merge(records, prefixes, key, flag_col, scratch)
+    bc = records.sparkSession.sparkContext.broadcast(prober)
+    cols = records.columns
+    schema_df = records.withColumn(flag_col, F.lit(False))
+    out_schema = ", ".join(f"`{c}` {t}" for c, t in schema_df.dtypes)
+    key_i = cols.index(key)
 
+    def probe(batches):
+        flags = bc.value
+        for batch in batches:
+            flag = flags(batch.column(key_i))
+            yield pa.RecordBatch.from_arrays(
+                list(batch.columns) + [pa.array(flag, type=pa.bool_())],
+                names=cols + [flag_col])
+
+    return records.mapInArrow(probe, out_schema)
+
+
+def _prefix_flag_merge(records: DataFrame, prefixes: DataFrame, key: str,
+                       flag_col: str, scratch: list | None) -> DataFrame:
+    """Range-partitioned ordered merge engine (module docstring)."""
     from .banlist import prefix_free
     spark = records.sparkSession
     pf = prefix_free(prefixes.withColumnRenamed(prefixes.columns[0], "url"))

@@ -84,20 +84,22 @@ def main():
         "Claim: partial salted top-k before the exact per-host window rank "
         "bounds skew; one hash exchange on (host) only.", out, 60)
 
-    # 5. Exclude anti-join path
+    # 5. Exclude lists that fit the driver: probed inside the field UDF
     from cdx_writer_spark.operators.cdx import cdx_fields as cf
-    big = spark.createDataFrame(
+    small = spark.createDataFrame(
         [(f"com,example{i})",) for i in range(10)], "prefix string")
-    exc = cf(recs, excludes=big)
+    exc = cf(recs, excludes=small)
     plan = grab(
-        exc, "small exclude list as codegen exists() — no join at all",
-        "Claim: small/moderate lists (<= BNLJ_MAX_PREFIXES) decide every "
-        "record with a literal-array exists() inside whole-stage codegen "
-        "— no join, no Exchange, and no duplicate rows under overlapping "
-        "prefixes (the LEFT prefix join this replaced emitted one row "
-        "per matching prefix).", out, 60)
-    checks["small exclude: no join, no exchange"] = (
-        "Join" not in plan and "Exchange" not in plan)
+        exc, "driver-sized exclude list probed inside the field UDF",
+        "Claim: a list that fits the driver is reduced there to a "
+        "prefix-free prober, broadcast, and decided inside the one "
+        "ArrowEvalPython that computes the urlkey — no join, no "
+        "Exchange, no second Python stage (MapInArrow), and no "
+        "literal-array exists().", out, 60)
+    checks["driver-sized exclude: one Python stage, no join, no exchange"] = (
+        plan.count("ArrowEvalPython (") == 1 and "MapInArrow" not in plan
+        and "exists(" not in plan and "Join" not in plan
+        and "Exchange" not in plan)
 
     # 5b. BIG exclude lists: range-merge, never a nested-loop join
     from cdx_writer_spark.plans.catalog import prefix_exclude_big

@@ -280,23 +280,26 @@ def test_prefix_exclude_unicode_prefixes(spark):
     assert got == ["com,h1)/x", "com,hé)/a"]
 
 
-def test_cdx_fields_big_exclude_equals_bnlj(spark, monkeypatch):
-    """cdx_fields must produce identical rows whichever exclude engine the
-    list size selects (broadcast nested-loop vs ordered merge)."""
-    from cdx_writer_spark.operators import cdx as cdx_mod
+@pytest.mark.parametrize("engine", ["broadcast", "merge"])
+def test_cdx_fields_big_exclude_equals_bnlj(spark, monkeypatch, engine):
+    """cdx_fields must produce the rows of a per-row any(startswith) on
+    either exclude engine: the broadcast prober inside the field UDF, or
+    the range-partitioned ordered merge."""
+    from cdx_writer_spark.operators import exclude as ex_mod
     from cdx_writer_spark.operators.cdx import cdx_fields
     from cdx_writer_spark.sources.warc import read_warc_records
+    if engine == "merge":
+        monkeypatch.setattr(ex_mod, "BROADCAST_MAX_PREFIXES", 0)
     recs = read_warc_records(spark, "/root/reference/tests/uncompressed.arc")
-    prefixes = spark.createDataFrame(
-        [("de,sueddeutsche)",), ("com,nomatch)",)], ["prefix"])
-    a = sorted(r["urlkey"] for r in
-               cdx_fields(recs, all_records=True,
-                          excludes=prefixes).collect())
-    monkeypatch.setattr(cdx_mod, "BNLJ_MAX_PREFIXES", 0)
-    b = sorted(r["urlkey"] for r in
-               cdx_fields(recs, all_records=True,
-                          excludes=prefixes).collect())
-    assert a == b and len(a) == 3
+    plist = ["de,sueddeutsche)", "com,nomatch)"]
+    prefixes = spark.createDataFrame([(p,) for p in plist], ["prefix"])
+    want = sorted(r["urlkey"] for r in
+                  cdx_fields(recs, all_records=True).collect()
+                  if not any(r["urlkey"].startswith(p) for p in plist))
+    got = sorted(r["urlkey"] for r in
+                 cdx_fields(recs, all_records=True,
+                            excludes=prefixes).collect())
+    assert got == want and len(got) == 3
 
 
 def test_bucketed_tables_join_without_exchange(spark):
