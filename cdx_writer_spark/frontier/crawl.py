@@ -15,11 +15,11 @@ Scale notes (10^10 frontier):
   per-host budgets can be reduced by robots Crawl-delay overrides
   (frontier/robots.py); the global pop is skipped when the frontier
   fits in the batch;
-* the seen-set anti-join is the only unavoidable big shuffle; bloom
-  pre-filtering (frontier/seen.py) cuts its probe volume above 10^6
-  keys, auto-flipping to the sharded (shard, bitmap) deployment at
-  10^8+; the big-batch fetch join is bloom-prefiltered the same way so
-  the web side shuffles ~|batch| rows, never |web|;
+* the seen-set anti-join is the only unavoidable big shuffle; at
+  cfg.bloom_min_keys seen keys a sharded cuckoo filter
+  (frontier/seen.py) starts pre-filtering its probe side; the big-batch
+  fetch join is bloom-prefiltered over the batch's urls so the web side
+  shuffles ~|batch| rows, never |web|;
 * small generations run FUSED (two jobs via lazy localCheckpoints —
   see crawl_step); checkpoint-block storage is freed deterministically
   with util.free_checkpoint, never left to JVM GC;
@@ -98,20 +98,17 @@ class CrawlConfig:
     per_host_budget: int = 4       # politeness: max fetches per host per gen
     global_batch: int = 2000       # frontier pops per generation
     priority_decay: float = 0.8
-    bloom_fpp: float = 0.01
-    use_bloom: bool = True
-    # below this many seen keys the exact anti-join beats the filter: a
-    # few-million-key join is sub-second and parallel, while the bloom
-    # costs a build job + driver OR + broadcast per rebuild plus the
-    # recent-delta bookkeeping every generation — all core-count-
-    # independent serial time.  The r6 interleaved A/B at the 2M-page /
-    # 500k-batch bench shape (the filter first engages at gen 2, ~1M
-    # seen keys) measured the 3-generation loop at 20.1-25.4s with
-    # min=4M (filter never builds) vs 29.1-81.9s with min=1M, identical
-    # CDX output — the crossover where cutting the probe shuffle pays is
-    # comfortably above 4M keys on any hardware, since the build cost
-    # itself grows with |seen| no slower than the probe saving does
-    # until |seen| >> |batch|.
+    # at or above this many seen keys the loop keeps the sharded cuckoo
+    # seen-filter (frontier/seen.py) beside the exact anti-join; below
+    # it the exact join runs alone.  A few-million-key join is
+    # sub-second and parallel, while the filter costs a build job plus
+    # one co-grouped insert job per generation — core-count-independent
+    # serial time.  The r6 interleaved A/B at the 2M-page / 500k-batch
+    # shape (filter first engaging at ~1M seen keys) measured the
+    # 3-generation loop at 20.1-25.4s with min=4M (filter never builds)
+    # vs 29.1-81.9s with min=1M, identical CDX.  The sidecar-only A/B
+    # at 10^7 seen keys and the filter-from-key-1 loop A/B (BENCH.md,
+    # "One URL-seen sidecar") leave that crossover where it was.
     bloom_min_keys: int = 4_000_000
     # broadcast the selected batch into the fetch/leftover joins only up
     # to this size; beyond it the driver collect+rebroadcast is a
@@ -121,15 +118,6 @@ class CrawlConfig:
     # key — Iceberg storage-partitioned joins — so the shuffle is
     # one-sided or free; plans/layout.py carries that design.)
     broadcast_batch_max_rows: int = 200_000
-    # 0 = driver-global broadcast bloom (fine to ~10^8 keys); > 0 = the
-    # sharded (shard, bitmap)-table bloom from frontier/seen.py whose
-    # driver memory is O(1) in the key count — the 10^10 deployment.
-    bloom_shards: int = 0
-    # with bloom_shards == 0, the crawl AUTO-FLIPS to the sharded bloom
-    # (shard count sized from capacity) once the seen set crosses this —
-    # no operator knowledge needed for the 10^10 path; the flip happens
-    # as an ordinary rebuild, so parity with the exact join is unchanged
-    bloom_auto_shard_keys: int = 200_000_000
     # skip the salted pre-top-k (schedule phase 0) while the frontier is
     # below this many rows: the skew it guards against needs ONE host
     # with enough rows to overwhelm a single reducer's sort (~10^7), and
@@ -138,10 +126,6 @@ class CrawlConfig:
     # shuffle is pure fixed cost per generation.  Size comes free from
     # the observe() metric on the frontier's checkpoint materialization.
     salt_phase_min_rows: int = 20_000_000
-    # global mode: novel keys accumulate in a small exact side table and
-    # the bitmap is re-OR-ed + re-broadcast only when they exceed this,
-    # so broadcast serialization is amortized instead of per-generation
-    bloom_rebroadcast_keys: int = 250_000
     # below this frontier size a generation runs FUSED: one heavy job
     # (the next-frontier checkpoint, which materializes fetch+parse+
     # discover in-line via lazy localCheckpoints) instead of 4-5, seen
@@ -164,24 +148,18 @@ class CrawlConfig:
     # and production-scale (unfused) generations keep AQE (skew-join
     # splitting, shuffle coalescing).  Evidence in BENCH.md.
     aqe_off_fused: bool = True
-    # which seen-set sidecar filter the loop maintains: "bloom" (default;
-    # global broadcast with auto-flip to ShardedBloom, above) or "cuckoo"
-    # (always the sharded (shard, buckets) table from frontier/seen.py —
-    # same contract, ~2 B/key, and O(1) DELETION so recrawl expiry via
-    # run_crawl(expire_keys=...) edits the filter instead of rebuilding)
-    seen_filter: str = "bloom"
     # build generation g+1's plan on a SECOND driver thread while
     # generation g's heavy job runs (the _AsyncSave pattern applied to
     # the ~1-2s/generation driver-serial plan term — BENCH.md phase
     # table).  Speculative: the pre-built plan embeds this generation's
-    # gate decisions (fused/salt/top-k-skip), the live filter object and
-    # the recent-delta composition; run_crawl validates all of them
-    # against post-job reality and rebuilds from scratch on any
-    # mismatch, so results are bit-identical by construction (pinned by
-    # tests/test_frontier.py overlap parity).  Only engaged on fused
-    # broadcast-path generations with a plan-only schedule
-    # (global_batch <= 150k) and no sharded/cuckoo filter (those replace
-    # the filter object every generation, which would always invalidate).
+    # gate decisions (fused/salt/top-k-skip) and the absence of a seen
+    # filter; run_crawl validates both against post-job reality and
+    # rebuilds from scratch on any mismatch, so results are bit-identical
+    # by construction (pinned by tests/test_frontier.py overlap parity).
+    # Only engaged on fused broadcast-path generations with a plan-only
+    # schedule (global_batch <= 150k) and no live seen filter (its
+    # per-generation insert replaces the filter object, which would
+    # always invalidate).
     # Default ON since r5: with growth-aware frontier-size speculation
     # both eligible headline generations engage; interleaved A/Bs at the
     # 3-generation headline shape measured median +5.5% (3 pairs) and
@@ -470,18 +448,16 @@ def robots_gate(candidates: DataFrame, robots: DataFrame | None = None,
 
 def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
                robots: DataFrame | None, cfg: CrawlConfig, gen: int,
-               bloom=None, recent: DataFrame | None = None,
-               frontier_size: int | None = None, fused: bool = False,
+               bloom=None, frontier_size: int | None = None,
+               fused: bool = False,
                host_budgets: DataFrame | None = None,
                robots_rules: DataFrame | None = None):
     """One generation.  Returns (next_frontier, new_seen_keys, cdx, metrics).
 
     ``pages`` simulates the web: fetch = equi join on url.  ``bloom`` is an
-    optional pre-built seen-set filter — a (bitmap|Broadcast, m, k) tuple
-    or a seen.ShardedBloom (run_crawl maintains either incrementally);
-    ``recent`` is the small set of keys seen since the filter last covered
-    the full set (see seen.anti_join_seen).  Without a bloom the exact
-    anti-join runs alone.
+    optional seen.ShardedCuckoo covering all of ``seen`` (run_crawl
+    maintains it incrementally); without it the exact anti-join runs
+    alone.
 
     Metric counts ride as ``observe()`` metrics on frames this step
     already materializes eagerly — zero extra jobs per generation (the
@@ -492,7 +468,7 @@ def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
     cfg.fuse_below_rows): the generation runs as ONE heavy job — the
     next-frontier checkpoint in run_crawl — plus a trivial count of the
     persisted parse blocks.  Every compute-once frame (selection,
-    parsed, bloom-flagged candidates) uses a LAZY localCheckpoint: the
+    parsed, filter-flagged candidates) uses a LAZY localCheckpoint: the
     first job that touches it materializes+persists it in-line and
     later consumers (including a second union branch of the SAME job)
     read the persisted blocks, verified compute-once on Spark 4.1.2.
@@ -507,18 +483,18 @@ def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
     observe() under a lazy checkpoint records nothing (verified — the
     metric fires empty), which is why the scheduled count is a
     post-materialization count() instead.
+
+    ``metrics["step_phases"]`` holds the driver wall clock of each
+    plan-building sub-phase (the selection and parse checkpoints are
+    eager jobs outside fused mode).
     """
     from pyspark.sql import Observation
 
-    # sub-phase wall clocks (driver): populated into metrics["step_phases"]
-    # when SPARK_GRAFT_STEP_TIMERS=1 — diagnostics for the Amdahl-term work
-    _timers: dict[str, float] = {}
-    _timing = os.environ.get("SPARK_GRAFT_STEP_TIMERS") == "1"
+    _timers: dict[str, float] = {}   # sub-phase driver wall clocks
 
     def _mark(tag: str, t0: float) -> float:
         t = time.perf_counter()
-        if _timing:
-            _timers[tag] = round(t - t0, 3)
+        _timers[tag] = round(t - t0, 3)
         return t
 
     _t = time.perf_counter()
@@ -623,10 +599,10 @@ def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
         cand = robots_gate(cand, robots, rules=robots_rules)
     _t = _mark("cand_robots_build", _t)
 
-    # seen-set: candidates anti-join seen (bloom pre-filter cuts the probe
-    # volume; the exact join stays the source of truth)
+    # seen-set: candidates anti-join seen (the cuckoo pre-filter cuts the
+    # probe volume; the exact join stays the source of truth)
     from .seen import anti_join_seen
-    novel = anti_join_seen(cand, seen, "urlkey", bloom=bloom, recent=recent,
+    novel = anti_join_seen(cand, seen, "urlkey", bloom=bloom,
                            materialize="lazy" if fused else True,
                            scratch=scratch)
     _t = _mark("anti_join_seen", _t)
@@ -680,9 +656,8 @@ def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
         # generations and throughput degrades monotonically — measured
         # 2x over 3 repeats)
         "_scratch": scratch,
+        "step_phases": _timers,
     }
-    if _timing:
-        metrics["step_phases"] = dict(_timers)
     if not fused:
         metrics["novel"] = int(obs_novel.get["n"])
         # the persisted frame behind new_seen (a projection of it): the
@@ -980,7 +955,7 @@ def load_state(spark: SparkSession, root: str):
     # before it — stop there.  (Deciding from only the latest manifest
     # would union legacy FULL snapshots as if they were deltas after a
     # resume that appended delta-v2 gens to a legacy dir, duplicating the
-    # seen set ~gen-fold and inflating the bloom sizing.)
+    # seen set ~gen-fold and inflating the filter sizing.)
     parts: list[tuple[int, str]] = []
     for i in range(gen, -1, -1):
         parts.append((i, os.path.join(_gen_dir(root, i), "seen")))
@@ -1000,6 +975,18 @@ def load_state(spark: SparkSession, root: str):
     return gen, fr, seen, m
 
 
+def _seen_filter(seen: DataFrame, capacity: int):
+    """The sharded cuckoo over the whole seen set, sized for ``capacity``
+    keys (at most 16M keys, 64 MB of buckets, per shard; at least 16
+    shards) and checkpointed.  Every (re)build in run_crawl goes through
+    here."""
+    from .seen import ShardedCuckoo, build_sharded_cuckoo
+    f = build_sharded_cuckoo(seen, "urlkey",
+                             max(16, -(-capacity // 16_000_000)), capacity)
+    return ShardedCuckoo(f.df.localCheckpoint(eager=True), f.n_shards,
+                         f.n_buckets)
+
+
 def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
               robots: DataFrame | None, cfg: CrawlConfig, generations: int,
               checkpoint_dir: str | None = None, resume: bool = False,
@@ -1013,49 +1000,32 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
     ``expire_keys`` (resume path): recrawl scheduling — a (urlkey) frame
     of URLs whose revisit interval expired.  They leave the seen set and
     the emitted-keys guard, so rediscovering them re-enqueues and
-    re-emits.  With ``seen_filter="cuckoo"`` the expiry is a DELETE
-    against the sharded filter (O(|expired|) co-grouped work) instead of
-    the O(total) rebuild every bloom variant would need.  Cuckoo-delete
-    caveat: deleting a key whose (fingerprint, bucket) collides with a
-    different stored key can evict that victim from the filter, so a few
-    URLs BEYOND the expired set may be re-crawled/re-emitted early — the
-    standard cuckoo-filter deletion semantics; callers scheduling expiry
-    should expect occasional extra duplicates (the exact seen table is
-    untouched, so correctness of the filter+exact pipeline is preserved).
-    The expiry is PERSISTED as a tombstone under
-    ``checkpoint_dir/expired/`` (keys parquet + asof_gen manifest):
-    later resumes subtract it from the seen/emitted reassembly for all
-    generations that predate it, so a recrawl that wasn't rediscovered
-    yet is not silently cancelled and expire_keys need not be re-passed.
+    re-emits.  No filter outlives a call, so the seen filter, if one is
+    engaged, is simply built over the post-expiry set — nothing beyond
+    the expired keys is re-admitted.  The expiry is PERSISTED as a
+    tombstone under ``checkpoint_dir/expired/`` (keys parquet + asof_gen
+    manifest): later resumes subtract it from the seen/emitted
+    reassembly for all generations that predate it, so a recrawl that
+    wasn't rediscovered yet is not silently cancelled and expire_keys
+    need not be re-passed.
 
     Scale bookkeeping (all O(delta) per generation, never O(total)):
     * the seen set is a UNION of per-generation checkpointed deltas — no
       generation rewrites or re-materializes the whole set;
-    * the bloom filter over it is maintained incrementally.  Global mode
-      (bloom_shards=0): built once with capacity headroom and broadcast
-      ONCE; per-generation novel keys accumulate in a small exact
-      `recent` side table (checked by broadcast anti-join) and are OR-ed
-      into the bitmap + re-broadcast only when they exceed
-      cfg.bloom_rebroadcast_keys — broadcast serialization is amortized,
-      superseded broadcasts unpersisted.  Sharded mode (bloom_shards>0):
-      the (shard, bitmap) table is merged with the delta's shard bitmaps
-      each generation, all distributed, driver memory O(1) in keys;
-    * rebuilt (with 4x capacity) only if the set outgrows the filter;
-    * the seen-set cardinality that gates/params the bloom is a running
+    * the sharded cuckoo over it (from cfg.bloom_min_keys seen keys) is
+      built once with 4x capacity headroom, then takes each generation's
+      novel keys by one co-grouped insert job, driver memory O(1) in
+      keys; it is rebuilt over the full set only when the count outgrows
+      that headroom or a shard overflows (_seen_filter);
+    * the seen-set cardinality that gates/sizes the filter is a running
       total from per-generation novel counts — no seen.count() jobs;
     * per-generation metric counts are observe() metrics on frames the
       step materializes anyway — no dedicated count() jobs."""
-    import numpy as np
+    from .seen import ShardedCuckoo, is_cuckoo_overflow, sharded_cuckoo_insert
 
-    from .seen import ShardedBloom, ShardedCuckoo, build_bloom, \
-        build_sharded_bloom, build_sharded_cuckoo, merge_sharded_blooms, \
-        sharded_cuckoo_delete, sharded_cuckoo_insert
-
-    use_cuckoo = cfg.seen_filter == "cuckoo"
     start_gen = 0
     all_metrics: list[dict] = []
     emitted_keys = None
-    pre_expire_seen = exp = None
     seen_parts: list[DataFrame]
     if resume and checkpoint_dir:
         state = load_state(spark, checkpoint_dir)
@@ -1081,7 +1051,6 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                 # everything this run didn't rediscover.
                 exp = expire_keys.select("urlkey").distinct()
                 _write_tombstone(checkpoint_dir, start_gen, exp)
-                pre_expire_seen = seen
                 seen = seen.join(exp, "urlkey", "left_anti")
                 emitted_keys = emitted_keys.join(exp, "urlkey",
                                                  "left_anti")
@@ -1112,38 +1081,11 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
     # check identity against this list before releasing any blocks.
     seen_handles: list = [init_handle]
 
-    sc = spark.sparkContext
-    if not cfg.use_bloom:
-        seen_count = 0
-    elif start_gen == 0:
-        # fresh start: |seen| == |frontier| == the seed count we already
-        # observed — no dedicated count() job
-        seen_count = frontier_size
-    else:
-        seen_count = seen.count()
-    bloom = None                    # (Broadcast, m, k) | ShardedBloom
-    bloom_bits: "np.ndarray | None" = None   # driver copy, global mode
-    bloom_bc = None                 # live broadcast handle, global mode
-    bloom_mk: tuple[int, int] | None = None
-    bloom_cap = 0
-    recent_parts: list[DataFrame] = []   # novel keys not yet in the filter
-    pending_novel = 0
-
-    if (use_cuckoo and cfg.use_bloom and pre_expire_seen is not None
-            and seen_count >= cfg.bloom_min_keys):
-        # recrawl expiry with the deletable filter: build from the
-        # PRE-expiry set once (the deployment persists this table across
-        # runs, so in production this build doesn't happen either), then
-        # DELETE the expired keys — O(|expired|) co-grouped work where
-        # any bloom variant would need an O(total) rebuild.
-        n_exp = exp.count()
-        bloom_cap = max(4 * (seen_count + n_exp), cfg.bloom_min_keys)
-        n_shards = cfg.bloom_shards or max(16, -(-bloom_cap // 16_000_000))
-        filt = build_sharded_cuckoo(pre_expire_seen, "urlkey", n_shards,
-                                    capacity=bloom_cap)
-        filt = sharded_cuckoo_delete(filt, exp, "urlkey")
-        bloom = ShardedCuckoo(filt.df.localCheckpoint(eager=True),
-                              filt.n_shards, filt.n_buckets)
+    # fresh start: |seen| == |frontier| == the seed count we already
+    # observed — no dedicated count() job
+    seen_count = frontier_size if start_gen == 0 else seen.count()
+    filt: ShardedCuckoo | None = None   # the seen filter, once engaged
+    filt_cap = 0                        # the key count it is sized for
 
     cdx_parts = []
     saver = _AsyncSave()
@@ -1185,75 +1127,24 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                 if spark.conf.get(aqe_key) != want:
                     saver.join()
                     spark.conf.set(aqe_key, want)
-            want_sharded = cfg.bloom_shards > 0 or (
-                cfg.use_bloom and seen_count >= cfg.bloom_auto_shard_keys)
-            mode_flip = (bloom is not None and not use_cuckoo
-                         and want_sharded != isinstance(bloom, ShardedBloom))
-            if cfg.use_bloom and seen_count >= cfg.bloom_min_keys and (
-                    bloom is None or seen_count > bloom_cap or mode_flip):
-                # (re)build over the full set with headroom so later generations
-                # only fold in their deltas
-                bloom_cap = max(4 * seen_count, cfg.bloom_min_keys)
-                if use_cuckoo:
-                    # the cuckoo sidecar is ALWAYS the sharded table — its
-                    # whole point is the 10^10 deletable path; shard sizing
-                    # mirrors the sharded bloom's
-                    n_shards = cfg.bloom_shards or max(
-                        16, -(-bloom_cap // 16_000_000))
-                    sck = build_sharded_cuckoo(seen, "urlkey", n_shards,
-                                               capacity=bloom_cap)
-                    old_bloom_df = bloom.df if isinstance(
-                        bloom, (ShardedBloom, ShardedCuckoo)) else None
-                    bloom = ShardedCuckoo(sck.df.localCheckpoint(eager=True),
-                                          sck.n_shards, sck.n_buckets)
-                    if old_bloom_df is not None:
-                        free_checkpoint(old_bloom_df)
-                elif want_sharded:
-                    # auto-sized shards: ~16M keys (~20 MB bitmap) per shard
-                    n_shards = cfg.bloom_shards or max(
-                        16, -(-bloom_cap // 16_000_000))
-                    sb = build_sharded_bloom(seen, "urlkey", n_shards,
-                                             capacity=bloom_cap,
-                                             fpp=cfg.bloom_fpp)
-                    old_bloom_df = bloom.df if isinstance(bloom, ShardedBloom) \
-                        else None
-                    bloom = ShardedBloom(sb.df.localCheckpoint(eager=True),
-                                         sb.n_shards, sb.m, sb.k)
-                    if old_bloom_df is not None:
-                        free_checkpoint(old_bloom_df)
-                    if bloom_bc is not None:
-                        # released the superseded GLOBAL filter (auto-flip)
-                        bloom_bc.unpersist()
-                        bloom_bc, bloom_bits, bloom_mk = None, None, None
-                else:
-                    b, m, k = build_bloom(seen, "urlkey", capacity=bloom_cap,
-                                          fpp=cfg.bloom_fpp)
-                    bloom_bits = np.frombuffer(b, dtype=np.uint64).copy()
-                    bloom_mk = (m, k)
-                    if bloom_bc is not None:
-                        bloom_bc.unpersist()
-                    bloom_bc = sc.broadcast(bloom_bits.tobytes())
-                    bloom = (bloom_bc, m, k)
-                recent_parts, pending_novel = [], 0
-            use_sharded = isinstance(bloom, ShardedBloom)
+            if filt is None and seen_count >= cfg.bloom_min_keys:
+                # the filter engages: build over the full set with
+                # headroom so later generations only insert their deltas
+                filt_cap = max(4 * seen_count, cfg.bloom_min_keys)
+                filt = _seen_filter(seen, filt_cap)
 
-            recent = _union_all(recent_parts) if recent_parts else None
             prev_frontier_handle = frontier   # current gen's persisted frontier
             prev_frontier_delta = seen_parts[-1]   # lazy delta reading its blocks
             _t0 = time.perf_counter()
             # a plan pre-built on the overlap thread last generation is
             # used ONLY if every assumption it baked in still holds:
-            # same gate decisions under the ACTUAL frontier size, the
-            # same live filter object (any rebuild/flush/insert replaces
-            # it), the same recent-delta composition, no compaction, no
+            # same gate decisions under the ACTUAL frontier size, still no
+            # seen filter (it was built without one), no compaction, no
             # resume guard.  Otherwise it is discarded and the plan is
             # rebuilt fresh — results identical either way.
             used_prebuilt = False
             if (pending is not None and pending["gen"] == gen and fused
-                    and emitted_keys is None
-                    and pending["bloom"] is bloom
-                    and pending["recent_ids"]
-                    == tuple(id(p) for p in recent_parts)
+                    and emitted_keys is None and filt is None
                     and pending["n_seen_parts"] == len(seen_parts)
                     and pending["decisions"]
                     == _gate_decisions(cfg, frontier_size)):
@@ -1264,8 +1155,8 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                 # a discarded speculative plan was never materialized —
                 # its lazy checkpoint marks hold no blocks; just drop it
                 frontier, new_seen, cdx, metrics = crawl_step(
-                    pages, frontier, seen, robots, cfg, gen, bloom=bloom,
-                    recent=recent, frontier_size=frontier_size, fused=fused,
+                    pages, frontier, seen, robots, cfg, gen, bloom=filt,
+                    frontier_size=frontier_size, fused=fused,
                     host_budgets=host_budgets,
                     robots_rules=robots_rules_plan)
                 if pending is not None:
@@ -1281,7 +1172,7 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
             # anti-join) through window shuffles — materialize it once; its
             # row count (and, fused, the novel-discovery count) ride along as
             # free observe() metrics.  In fused mode this is the generation's
-            # ONLY heavy job: selection, fetch, parse, discovery, bloom
+            # ONLY heavy job: selection, fetch, parse, discovery, filter
             # check, exact anti-join and union all materialize inside it.
             #
             # overlap_plan: while that job runs in THIS thread, a second
@@ -1298,7 +1189,7 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                 and cfg.global_batch <= 150_000
                 and cfg.global_batch <= cfg.broadcast_batch_max_rows
                 and len(seen_parts) + 1 < cfg.seen_compact_parts
-                and (bloom is None or isinstance(bloom, tuple)))
+                and filt is None)
             spec_delta_cur = None
             if do_overlap:
                 frontier = frontier.localCheckpoint(eager=False)
@@ -1307,11 +1198,6 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                                   .select("urlkey")
                                   .localCheckpoint(eager=False))
                 spec_seen = _union_all(seen_parts + [spec_delta_cur])
-                spec_recent_parts = (recent_parts + [spec_delta_cur]
-                                     if bloom is not None
-                                     else list(recent_parts))
-                spec_recent = (_union_all(spec_recent_parts)
-                               if spec_recent_parts else None)
                 # speculated next-generation frontier size; validated at
                 # use.  The running job's output size is unknowable here,
                 # but frontier growth in the discovery phase is
@@ -1330,13 +1216,13 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                 if prev_in_size:
                     spec_fs = max(0, round(
                         frontier_size * frontier_size / prev_in_size))
-                _ckpt, _bl = frontier, bloom
+                _ckpt = frontier
 
-                def _build(ckpt=_ckpt, sseen=spec_seen, srec=spec_recent,
-                           g=gen + 1, fs=spec_fs, bl=_bl):
+                def _build(ckpt=_ckpt, sseen=spec_seen, g=gen + 1,
+                           fs=spec_fs):
                     return crawl_step(
-                        pages, ckpt, sseen, robots, cfg, g, bloom=bl,
-                        recent=srec, frontier_size=fs, fused=True,
+                        pages, ckpt, sseen, robots, cfg, g,
+                        frontier_size=fs, fused=True,
                         host_budgets=host_budgets,
                         robots_rules=robots_rules_plan)
 
@@ -1348,9 +1234,7 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                 res = plan_thread.join()
                 if res is not None:
                     pending = {
-                        "gen": gen + 1, "result": res, "bloom": _bl,
-                        "recent_ids": tuple(id(p)
-                                            for p in spec_recent_parts),
+                        "gen": gen + 1, "result": res,
                         # seen_parts gains this generation's delta below
                         "n_seen_parts": len(seen_parts) + 1,
                         "decisions": _gate_decisions(cfg, spec_fs),
@@ -1383,7 +1267,7 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                 # frontier snapshot (they are exactly the generation==gen+1
                 # rows), as a LAZY checkpoint — its first consumer (the next
                 # generation's anti-join, or this generation's checkpoint
-                # write / bloom delta) materializes the compact key list
+                # write / filter insert) materializes the compact key list
                 # in-line, after which the seen chain reads these small
                 # blocks instead of re-filtering every retained full-frontier
                 # snapshot per generation (measured ~2x on the 3-generation
@@ -1409,98 +1293,46 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                 # long crawls: compact the delta chain so per-part scan/task
                 # overhead stays bounded — one O(total) pass amortized over
                 # seen_compact_parts generations; the superseded backing frames
-                # are freed at the END of this generation (the recent-bloom
-                # flush below is forced first so no recent part outlives them)
+                # are freed at the END of this generation
                 base = _union_all(seen_parts).localCheckpoint(eager=True)
                 compact_old = [h for h in seen_handles if h is not None]
                 seen_parts, seen_handles = [base], [base]
             seen = _union_all(seen_parts)
-            if cfg.use_bloom:
-                novel = metrics["novel"]
-                seen_count += novel
-                if bloom is not None and novel:
-                    if isinstance(bloom, ShardedCuckoo):
-                        if seen_count > bloom_cap:
-                            # the delta would push the filter past its design
-                            # load — a bloom just degrades fpp when overfull,
-                            # but a cuckoo shard HARD-FAILS once its kick loop
-                            # can't place a fingerprint.  Rebuild over the
-                            # full set with fresh headroom instead of folding
-                            # the delta (same cadence the top-of-loop rebuild
-                            # would have used one generation too late).
-                            bloom_cap = max(4 * seen_count,
-                                            cfg.bloom_min_keys)
-                            n_shards = cfg.bloom_shards or max(
-                                16, -(-bloom_cap // 16_000_000))
-                            newf = build_sharded_cuckoo(
-                                seen, "urlkey", n_shards, capacity=bloom_cap)
-                        else:
-                            # insert the delta keys into their shards
-                            # (co-grouped job, like the sharded bloom's merge
-                            # but an insert — a cuckoo table can't be OR-ed)
-                            newf = sharded_cuckoo_insert(bloom, new_seen,
-                                                         "urlkey")
-                        old_bloom_df = bloom.df
-                        try:
-                            new_df = newf.df.localCheckpoint(eager=True)
-                        except Exception as e:
-                            # the global-count guard above sizes against
-                            # bloom_cap, but a cuckoo shard hard-fails
-                            # PER-SHARD: severe urlkey-hash skew can
-                            # overflow one shard while seen_count is
-                            # still under cap.  Rebuild over the full
-                            # set with ESCALATED headroom — doubling
-                            # beyond the current cap, so the retry is
-                            # never a byte-identical (and hence
-                            # deterministically-failing) repeat of a
-                            # rebuild that itself just overflowed.
-                            if "over capacity" not in str(e):
-                                raise
-                            bloom_cap = max(4 * seen_count,
-                                            cfg.bloom_min_keys,
-                                            2 * bloom_cap)
-                            n_shards = cfg.bloom_shards or max(
-                                16, -(-bloom_cap // 16_000_000))
-                            newf = build_sharded_cuckoo(
-                                seen, "urlkey", n_shards,
-                                capacity=bloom_cap)
-                            new_df = newf.df.localCheckpoint(eager=True)
-                        bloom = ShardedCuckoo(
-                            new_df, newf.n_shards, newf.n_buckets)
-                        free_checkpoint(old_bloom_df)
-                    elif use_sharded:
-                        # geometry from the LIVE filter (cfg.bloom_shards is 0
-                        # when the sharded mode was auto-selected)
-                        delta = build_sharded_bloom(
-                            new_seen, "urlkey", bloom.n_shards, capacity=1,
-                            m=bloom.m, k=bloom.k)
-                        merged = merge_sharded_blooms(bloom, delta)
-                        old_bloom_df = bloom.df
-                        bloom = ShardedBloom(
-                            merged.df.localCheckpoint(eager=True),
-                            merged.n_shards, merged.m, merged.k)
-                        free_checkpoint(old_bloom_df)
+            novel = metrics["novel"]
+            seen_count += novel
+            if filt is not None and novel:
+                old_filt = filt
+                try:
+                    if seen_count > filt_cap:
+                        # the delta would push the filter past its design
+                        # load, and a cuckoo shard HARD-FAILS once its kick
+                        # loop can't place a fingerprint: rebuild over the
+                        # full set with fresh headroom instead
+                        filt_cap = max(4 * seen_count, cfg.bloom_min_keys)
+                        filt = _seen_filter(seen, filt_cap)
                     else:
-                        recent_parts.append(new_seen)
-                        pending_novel += novel
-                if (not use_sharded and bloom is not None and recent_parts
-                        and (pending_novel >= cfg.bloom_rebroadcast_keys
-                             or compact_old is not None)):
-                    # fold pending deltas into the bitmap + re-broadcast.
-                    # Forced at compaction: the recent frames read blocks that
-                    # are about to be freed, so they must enter the filter
-                    # first.
-                    m, k = bloom_mk
-                    b, _, _ = build_bloom(_union_all(recent_parts),
-                                          "urlkey", m=m, k=k)
-                    bloom_bits |= np.frombuffer(b, dtype=np.uint64)
-                    bloom_bc.unpersist()
-                    bloom_bc = sc.broadcast(bloom_bits.tobytes())
-                    bloom = (bloom_bc, m, k)
-                    recent_parts, pending_novel = [], 0
+                        # insert the delta keys into their shards (one
+                        # co-grouped job)
+                        f = sharded_cuckoo_insert(filt, new_seen, "urlkey")
+                        filt = ShardedCuckoo(
+                            f.df.localCheckpoint(eager=True), f.n_shards,
+                            f.n_buckets)
+                except Exception as e:
+                    # the count guard sizes against filt_cap, but a shard
+                    # overflows PER-SHARD: severe urlkey-hash skew can fill
+                    # one while seen_count is still under cap.  Rebuild
+                    # with ESCALATED headroom — doubling beyond the current
+                    # cap, so the retry never repeats (byte-identically,
+                    # hence deterministically) the build that just failed.
+                    if not is_cuckoo_overflow(e):
+                        raise
+                    filt_cap = max(4 * seen_count, cfg.bloom_min_keys,
+                                   2 * filt_cap)
+                    filt = _seen_filter(seen, filt_cap)
+                free_checkpoint(old_filt.df)
             # phase walls (driver clock): plan = crawl_step call (plus the
             # fetch-bloom job for big batches), job = the fused heavy job,
-            # post = parsed count + seen/bloom maintenance up to here
+            # post = parsed count + seen/filter maintenance up to here
             metrics["wall_phases"] = {
                 "plan": round(_t1 - _t0, 3), "job": round(_t2 - _t1, 3),
                 "post": round(time.perf_counter() - _t2, 3)}
@@ -1517,11 +1349,10 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                          else new_seen)
                 saver.start(checkpoint_dir, gen, frontier, delta, cdx, metrics)
             # ---- free superseded checkpoint blocks (last: everything that
-            # still reads them — frontier ckpt, bloom flush, save_state — has
-            # materialized).  A frontier snapshot that backs a live seen part
-            # (fused generations, and gen 0's seed keys) stays until the
-            # compaction that absorbs it; recent_parts never outlive their
-            # backing frames because the flush above is forced at compaction.
+            # still reads them — frontier ckpt, filter insert, save_state —
+            # has materialized).  A frontier snapshot that backs a live seen
+            # part (fused generations, and gen 0's seed keys) stays until
+            # the compaction that absorbs it.
             for df in scratch:
                 free_checkpoint(df)
             if (prev_frontier_handle is not frontier

@@ -1,41 +1,30 @@
-"""URL-seen set: exact anti-join + bloom pre-filter.
+"""URL-seen set: the exact anti-join, plus one sidecar filter at scale.
 
 Design for 10^10 keys (north_rule):
 
-* the *source of truth* is an exact LEFT ANTI join on a 64-bit url-hash,
-  both sides hash-partitioned on the same key so the shuffle is co-located;
-* a bloom filter only *pre-filters* candidates to cut shuffle volume — it
-  never decides membership (false positives would drop novel URLs, so a
-  bloom hit still goes through the exact join; a bloom miss is definitely
-  novel and can skip it).
+* the *source of truth* is an exact LEFT ANTI join on the url key;
+* at or above ``CrawlConfig.bloom_min_keys`` seen keys a sharded cuckoo
+  filter (:class:`ShardedCuckoo`) *pre-filters* candidates to cut the
+  join's probe volume — it never decides membership (a hit still goes
+  through the exact join; a miss is definitely novel and skips it).
 
-Three bloom deployments:
-  1. Spark's built-in runtime bloom-filter join
-     (``spark.sql.optimizer.runtime.bloomFilter.enabled`` — on in
-     session.py's frontier profile) — zero code, optimizer-injected.
-  2. The explicit GLOBAL filter below: built distributedly (per-partition
-     numpy bitmaps OR-reduced), broadcast to executors, checked in an
-     Arrow UDF.  Size: n·ln(1/fpp)/ln²2 bits — 12 MB per 10^7 keys at 1%
-     fpp; fine up to ~10^8 keys, after which the driver reduce and the
-     broadcast both balloon.
-  3. The SHARDED filter (:class:`ShardedBloom`): the key space is split
-     into ``n_shards`` by key-hash; each shard's bitmap lives in a ROW of
-     a distributed (shard, bitmap) DataFrame — built with
-     ``applyInPandas`` per shard, consulted by co-grouping candidates
-     with their shard's bitmap, merged/OR-ed shard-wise.  The driver
-     never holds ANY bitmap: its memory is O(1) in the key count, so a
-     10^10-key seen set (~12 GB of bitmap at 1% fpp) costs each executor
-     task one shard (~12 GB / n_shards) and the driver nothing.
+The filter splits the key space into ``n_shards`` by key hash; each
+shard's (n_buckets, 4) uint16 bucket array (16-bit fingerprints, ~2
+B/key at the design load) lives in a ROW of a (shard, buckets)
+DataFrame.  Build fills each shard in its own ``applyInPandas`` task,
+the per-generation novel keys are inserted by co-grouping them with
+their shard's row, and candidates are probed the same way: the driver
+never holds a bucket array, so its memory is O(1) in the key count.
+Keys leave the seen set (recrawl expiry) by a rebuild over what
+remains, never by a cuckoo delete, which can also evict a colliding
+key.  A shard whose kick loop cannot place a fingerprint raises
+:class:`CuckooOverflow`; the caller recognises it with
+:func:`is_cuckoo_overflow` through Spark's error wrapping and rebuilds
+with more headroom.
 
-Plus the CUCKOO alternative (bottom of file) — same sidecar contract
-and ~2 bytes/key, but with O(1) DELETION (recrawl scheduling evicts
-URLs whose revisit interval expired), which no bloom variant supports.
-It comes in the same two deployments as the bloom:
-:class:`CuckooFilter` (driver-global, to ~10^8 keys) and
-:class:`ShardedCuckoo` (the 10^10 path: a (shard, buckets) table —
-built per shard with ``applyInPandas``, delta keys inserted and expired
-keys deleted by co-grouping them with their shard's row, candidates
-probed the same way; the driver never holds any bucket array).
+The driver-global bloom (:func:`build_bloom`, :func:`bloom_prefilter`)
+is not a seen-set filter: crawl_step's big-batch fetch join uses it
+over the selected batch's urls so the web side shuffles ~|batch| rows.
 """
 
 from __future__ import annotations
@@ -48,12 +37,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 __all__ = ["bloom_params", "build_bloom", "bloom_prefilter", "anti_join_seen",
-           "ShardedBloom", "build_sharded_bloom", "merge_sharded_blooms",
-           "sharded_bloom_prefilter", "CuckooFilter", "cuckoo_params",
-           "build_cuckoo", "cuckoo_prefilter", "cuckoo_insert_keys",
-           "cuckoo_delete_keys", "ShardedCuckoo", "build_sharded_cuckoo",
-           "sharded_cuckoo_insert", "sharded_cuckoo_delete",
-           "sharded_cuckoo_prefilter"]
+           "CUCKOO_OVERFLOW", "CuckooOverflow", "is_cuckoo_overflow",
+           "cuckoo_params", "ShardedCuckoo", "build_sharded_cuckoo",
+           "sharded_cuckoo_insert", "sharded_cuckoo_prefilter"]
 
 
 def bloom_params(capacity: int, fpp: float = 0.01) -> tuple[int, int]:
@@ -64,18 +50,11 @@ def bloom_params(capacity: int, fpp: float = 0.01) -> tuple[int, int]:
     return m, min(k, 8)
 
 
-def build_bloom(df: DataFrame, key: str, capacity: int = 0,
-                fpp: float = 0.01, m: int | None = None,
-                k: int | None = None) -> tuple[bytes, int, int]:
+def build_bloom(df: DataFrame, key: str, capacity: int,
+                fpp: float = 0.01) -> tuple[bytes, int, int]:
     """Distributed bloom build: per-partition numpy bitmaps, OR-reduced.
-    Returns (bitmap bytes, m_bits, k_hashes).
-
-    Pass explicit ``m``/``k`` to build a DELTA bitmap compatible with an
-    existing filter (same geometry) — the caller ORs the two byte strings.
-    This is how the crawl loop maintains its seen-set filter incrementally:
-    O(novel) per generation instead of an O(total) rebuild."""
-    if m is None or k is None:
-        m, k = bloom_params(capacity, fpp)
+    Returns (bitmap bytes, m_bits, k_hashes)."""
+    m, k = bloom_params(capacity, fpp)
     hashed = df.select(
         F.xxhash64(F.col(key), F.lit(1)).alias("h1"),
         F.xxhash64(F.col(key), F.lit(2)).bitwiseOR(F.lit(1)).alias("h2"))
@@ -101,19 +80,12 @@ def build_bloom(df: DataFrame, key: str, capacity: int = 0,
     return acc.tobytes(), m, k
 
 
-def bloom_prefilter(candidates: DataFrame, key: str, bitmap,
+def bloom_prefilter(candidates: DataFrame, key: str, bitmap: bytes,
                     m: int, k: int) -> DataFrame:
-    """Adds ``maybe_seen``: False ⇒ definitely novel (skip the exact join),
-    True ⇒ must be resolved by the exact anti-join.
-
-    ``bitmap`` may be raw bytes (broadcast here, once per call) or an
-    already-broadcast handle — long crawls pass the handle so the bitmap
-    is serialized to executors once per (re)build, not once per
-    generation."""
-    from pyspark.broadcast import Broadcast
-    spark = candidates.sparkSession
-    bc = (bitmap if isinstance(bitmap, Broadcast)
-          else spark.sparkContext.broadcast(bitmap))
+    """Adds ``maybe_seen``: False ⇒ definitely absent from the filtered
+    set, True ⇒ must be resolved by an exact join.  ``bitmap`` is
+    broadcast here, once per call."""
+    bc = candidates.sparkSession.sparkContext.broadcast(bitmap)
 
     @F.pandas_udf(T.BooleanType())
     def might_contain(h1: pd.Series, h2: pd.Series) -> pd.Series:
@@ -134,18 +106,12 @@ def bloom_prefilter(candidates: DataFrame, key: str, bitmap,
 
 
 def anti_join_seen(candidates: DataFrame, seen: DataFrame, key: str = "urlkey",
-                   bloom=None, recent: DataFrame | None = None,
+                   bloom: ShardedCuckoo | None = None,
                    materialize: bool | str = True,
                    scratch: list | None = None) -> DataFrame:
-    """candidates − seen.  With a bloom sidecar (a ``(bitmap, m, k)``
-    tuple or a :class:`ShardedBloom`), only the maybe-seen slice pays the
-    join shuffle; the definite-novel slice is unioned back.
-
-    ``recent``: keys seen since the bloom was last (re)built/broadcast.
-    The bloom-miss slice must still be checked against them (a bloom miss
-    only proves absence from what the FILTER covers); ``recent`` is small
-    by construction (bounded by the rebroadcast threshold) so this is a
-    broadcast anti-join, not a shuffle.
+    """candidates − seen.  With a :class:`ShardedCuckoo` sidecar, only the
+    maybe-seen slice pays the join shuffle; the definite-novel slice is
+    unioned back.
 
     ``materialize``: the flagged frame feeds TWO consumers (the novel
     slice and the maybe slice); without materializing it once, everything
@@ -166,161 +132,37 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame, key: str = "urlkey",
     frees them degrades monotonically as the block store fills."""
     if bloom is None:
         return candidates.join(seen.select(key), key, "left_anti")
-    if isinstance(bloom, ShardedBloom):
-        flagged = sharded_bloom_prefilter(candidates, key, bloom)
-    elif isinstance(bloom, ShardedCuckoo):
-        flagged = sharded_cuckoo_prefilter(candidates, key, bloom)
-    elif isinstance(bloom, CuckooFilter):
-        flagged = cuckoo_prefilter(candidates, key, bloom)
-    else:
-        bitmap, m, k = bloom
-        flagged = bloom_prefilter(candidates, key, bitmap, m, k)
+    flagged = sharded_cuckoo_prefilter(candidates, key, bloom)
     if materialize:
         flagged = flagged.localCheckpoint(eager=(materialize != "lazy"))
         if scratch is not None:
             scratch.append(flagged)
     novel = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    if recent is not None:
-        novel = novel.join(F.broadcast(recent.select(key)), key, "left_anti")
     maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     resolved = maybe.join(seen.select(key), key, "left_anti")
     return novel.unionByName(resolved)
-
-
-# ----------------------------------------------------------- sharded ----
-
-@dataclass
-class ShardedBloom:
-    """Distributed bloom: one bitmap row per key-hash shard.  ``df`` has
-    schema (shard int, bitmap binary); geometry (m, k) is per shard."""
-    df: DataFrame
-    n_shards: int
-    m: int
-    k: int
-
-
-def _shard_col(key: str, n_shards: int):
-    return F.pmod(F.xxhash64(F.col(key), F.lit(0)), F.lit(n_shards)).cast("int")
-
-
-def _hash_cols(key: str):
-    return (F.xxhash64(F.col(key), F.lit(1)).alias("_h1"),
-            F.xxhash64(F.col(key), F.lit(2)).bitwiseOR(F.lit(1)).alias("_h2"))
-
-
-def _set_bits(bits: np.ndarray, h1: np.ndarray, h2: np.ndarray,
-              m: int, k: int) -> None:
-    for i in range(k):
-        pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-        np.bitwise_or.at(bits, (pos >> np.uint64(6)).astype(np.int64),
-                         np.uint64(1) << (pos & np.uint64(63)))
-
-
-def build_sharded_bloom(df: DataFrame, key: str, n_shards: int,
-                        capacity: int, fpp: float = 0.01,
-                        m: int | None = None, k: int | None = None
-                        ) -> ShardedBloom:
-    """Build the (shard, bitmap) table with ``applyInPandas`` per shard.
-    ``capacity`` is TOTAL keys; each shard is sized for capacity/n_shards.
-    Nothing is collected: driver memory is O(1) in the key count.
-
-    Pass explicit ``m``/``k`` to build a geometry-compatible DELTA table
-    for :func:`merge_sharded_blooms` (incremental maintenance)."""
-    if m is None or k is None:
-        m, k = bloom_params(max(capacity // n_shards, 1024), fpp)
-    n_words = m // 64
-    hashed = df.select(_shard_col(key, n_shards).alias("shard"),
-                       *_hash_cols(key))
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(n_words, dtype=np.uint64)
-        _set_bits(bits, pdf["_h1"].to_numpy(dtype=np.uint64),
-                  pdf["_h2"].to_numpy(dtype=np.uint64), m, k)
-        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                             "bitmap": [bits.tobytes()]})
-
-    bdf = hashed.groupBy("shard").applyInPandas(
-        build, "shard int, bitmap binary")
-    return ShardedBloom(bdf, n_shards, m, k)
-
-
-def merge_sharded_blooms(a: ShardedBloom, b: ShardedBloom) -> ShardedBloom:
-    """OR two geometry-compatible sharded blooms shard-wise (the
-    incremental-maintenance step: a = covering filter, b = delta)."""
-    assert (a.n_shards, a.m, a.k) == (b.n_shards, b.m, b.k), \
-        "incompatible bloom geometries"
-    n_words = a.m // 64
-
-    def orfn(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = np.zeros(n_words, dtype=np.uint64)
-        for blob in pdf["bitmap"]:
-            acc |= np.frombuffer(bytes(blob), dtype=np.uint64)
-        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                             "bitmap": [acc.tobytes()]})
-
-    merged = (a.df.unionByName(b.df).groupBy("shard")
-              .applyInPandas(orfn, "shard int, bitmap binary"))
-    return ShardedBloom(merged, a.n_shards, a.m, a.k)
-
-
-def sharded_bloom_prefilter(candidates: DataFrame, key: str,
-                            bloom: ShardedBloom) -> DataFrame:
-    """Adds ``maybe_seen`` by co-grouping candidates with their shard's
-    bitmap: candidates are hash-partitioned on shard (the same shuffle the
-    exact anti-join would pay anyway, but carrying only candidate rows),
-    and each task reads exactly one shard bitmap.  A shard with no bitmap
-    row holds no seen keys, so its candidates are definitely novel."""
-    m, k = bloom.m, bloom.k
-    cand = candidates.select(
-        "*", _shard_col(key, bloom.n_shards).alias("_shard"),
-        *_hash_cols(key))
-    out_fields = [f"`{c}` {t}" for c, t in candidates.dtypes]
-    out_schema = ", ".join(out_fields + ["maybe_seen boolean"])
-    out_cols = [c for c, _ in candidates.dtypes]
-
-    def check(cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-        if cpdf.empty:
-            return pd.DataFrame(columns=out_cols + ["maybe_seen"])
-        out = cpdf[out_cols].copy()
-        if bpdf.empty:
-            out["maybe_seen"] = False
-            return out
-        bits = np.frombuffer(bytes(bpdf["bitmap"].iloc[0]), dtype=np.uint64)
-        h1 = cpdf["_h1"].to_numpy(dtype=np.uint64)
-        h2 = cpdf["_h2"].to_numpy(dtype=np.uint64)
-        res = np.ones(len(h1), dtype=bool)
-        for i in range(k):
-            pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-            word = bits[(pos >> np.uint64(6)).astype(np.int64)]
-            res &= (word >> (pos & np.uint64(63))) & np.uint64(1) != 0
-        out["maybe_seen"] = res
-        return out
-
-    return (cand.groupBy("_shard")
-            .cogroup(bloom.df.groupBy("shard"))
-            .applyInPandas(check, out_schema))
 
 
 # ----------------------------------------------------------- cuckoo ----
 
 CUCKOO_SLOTS = 4
 _CUCKOO_C = np.uint64(0x5bd1e995)          # odd constant: b2 = b1 ^ (fp*C)
+CUCKOO_OVERFLOW = "cuckoo filter over capacity"
 
 
-@dataclass
-class CuckooFilter:
-    """Partial-key cuckoo filter (north_rule names "bloom/cuckoo"):
-    16-bit fingerprints in ``(n_buckets, 4)`` buckets.  Same sidecar
-    contract as the bloom — a miss is DEFINITELY novel, a hit goes to
-    the exact join — plus the cuckoo extra: O(1) DELETION, which a
-    bloom cannot do (recrawl scheduling removes URLs from the seen set
-    when their revisit interval expires).  The alt-bucket mapping
-    ``b2 = b1 xor h(fp)`` is self-inverse, so any stored (bucket, fp)
-    slot can be reinserted knowing only its position — which makes
-    per-partition filters MERGEABLE by reinsertion (the distributed
-    build below) and the filter resizable."""
-    buckets: np.ndarray          # uint16, shape (n_buckets, CUCKOO_SLOTS)
-    n_buckets: int
+class CuckooOverflow(ValueError):
+    """A shard's kick loop could not place a fingerprint.  Raised in a
+    Python worker, so the driver sees it inside Spark's own exception,
+    whose text carries :data:`CUCKOO_OVERFLOW` — test with
+    :func:`is_cuckoo_overflow`, not by type."""
+
+    def __init__(self):
+        super().__init__(CUCKOO_OVERFLOW)
+
+
+def is_cuckoo_overflow(err: BaseException) -> bool:
+    """True when ``err`` (raw or wrapped by Spark) is a shard overflow."""
+    return CUCKOO_OVERFLOW in str(err)
 
 
 def cuckoo_params(capacity: int, load: float = 0.5) -> int:
@@ -347,11 +189,10 @@ def _cuckoo_bulk_insert(buckets: np.ndarray, fp: np.ndarray,
                         b1: np.ndarray, n_buckets: int) -> None:
     """Vectorized batch insert: two batched passes fill empty slots in
     each key's home then alternate bucket (grouping same-bucket keys with
-    a sort so every key claims a DISTINCT empty slot — holes left by
-    deletions are handled by indexing actual empty slots, not assuming
-    left-packed rows); only the residue that found both buckets full
-    takes the per-key kick loop — a small tail at the design load
-    factor.  Raises when a key cannot be placed (over capacity)."""
+    a sort so every key claims a DISTINCT empty slot); only the residue
+    that found both buckets full takes the per-key kick loop — a small
+    tail at the design load factor.  Raises :class:`CuckooOverflow` when
+    a key cannot be placed."""
     fp = np.asarray(fp, dtype=np.uint16)
     b = np.asarray(b1, dtype=np.int64)
     for _pass in range(2):
@@ -364,42 +205,17 @@ def _cuckoo_bulk_insert(buckets: np.ndarray, fp: np.ndarray,
         run_start = np.maximum.accumulate(
             np.where(first, np.arange(bs.size), 0))
         runpos = np.arange(bs.size) - run_start   # rank within its bucket
-        empty = buckets[bs] == 0                  # N x CUCKOO_SLOTS
-        ok = runpos < empty.sum(axis=1)
-        # the (runpos+1)-th empty slot of each row, hole-aware
-        cum = np.cumsum(empty, axis=1)
-        want = (cum == (runpos + 1)[:, None]) & empty
-        slot = want.argmax(axis=1)
+        # rows stay left-packed (nothing is ever deleted), so a key's
+        # slot is its bucket's fill count plus its rank
+        slot = (buckets[bs] != 0).sum(axis=1) + runpos
+        ok = slot < CUCKOO_SLOTS
         buckets[bs[ok], slot[ok]] = fs[ok]
         bs, fs = bs[~ok], fs[~ok]
         b, fp = _cuckoo_alt(bs, fs, n_buckets), fs
     for i in range(fp.size):
         if not _cuckoo_insert_one(buckets, int(b[i]), int(fp[i]),
                                   n_buckets):
-            raise ValueError("cuckoo filter over capacity")
-
-
-def _cuckoo_bulk_delete(buckets: np.ndarray, fp: np.ndarray,
-                        b1: np.ndarray, n_buckets: int) -> int:
-    """Batch delete: a vectorized membership probe finds the keys with
-    any hit; only those are walked serially (two identical fingerprints
-    deleting from the same bucket must clear two DISTINCT slots, which a
-    vectorized clear cannot order).  Returns how many were removed."""
-    fp = np.asarray(fp, dtype=np.uint16)
-    b1 = np.asarray(b1, dtype=np.int64)
-    b2 = _cuckoo_alt(b1, fp, n_buckets)
-    hit = ((buckets[b1] == fp[:, None]).any(axis=1)
-           | (buckets[b2] == fp[:, None]).any(axis=1))
-    removed = 0
-    for i in np.flatnonzero(hit):
-        f = int(fp[i])
-        for cand in (int(b1[i]), int(b2[i])):
-            slots = np.flatnonzero(buckets[cand] == f)
-            if slots.size:
-                buckets[cand, slots[0]] = 0
-                removed += 1
-                break
-    return removed
+            raise CuckooOverflow()
 
 
 def _cuckoo_insert_one(buckets: np.ndarray, b: int, fp: int,
@@ -425,137 +241,23 @@ def _cuckoo_insert_one(buckets: np.ndarray, b: int, fp: int,
     return False
 
 
-def build_cuckoo(df: DataFrame, key: str, capacity: int) -> CuckooFilter:
-    """Distributed build of the DRIVER-GLOBAL filter: each partition
-    fills a full-geometry filter over its keys (mapInPandas), the driver
-    merges them by bulk-reinserting every stored slot — possible only
-    because the alt mapping is self-inverse.  Driver peak memory = 2
-    partial filters, O(capacity) not O(keys x partitions).
-
-    SCALE LIMIT: the driver holds the merged filter (~2 B/key — ~20 GB
-    at 10^10 keys), so this variant is for seen sets to ~10^8 keys, like
-    the global bloom.  The 10^10 deployment is :class:`ShardedCuckoo`
-    below: a (shard, buckets) table with O(1) driver memory, distributed
-    build/insert/delete, the one `run_crawl(seen_filter="cuckoo")`
-    uses."""
-    n_buckets = cuckoo_params(capacity)
-    hashed = df.select(
-        F.xxhash64(F.col(key), F.lit(1)).alias("h1"),
-        F.xxhash64(F.col(key), F.lit(2)).alias("h2"))
-
-    def to_filter(batches):
-        buckets = np.zeros((n_buckets, CUCKOO_SLOTS), dtype=np.uint16)
-        for pdf in batches:
-            fp, b1 = _cuckoo_fp_bucket(pdf["h1"].to_numpy(dtype=np.uint64),
-                                       pdf["h2"].to_numpy(dtype=np.uint64),
-                                       n_buckets)
-            _cuckoo_bulk_insert(buckets, fp, b1, n_buckets)
-        yield pd.DataFrame({"buckets": [buckets.tobytes()]})
-
-    # stream the partials one at a time (toLocalIterator) so driver peak
-    # memory really is two filters, not one per input partition.  The
-    # reinsertion itself is the vectorized bulk kernel — a stored slot's
-    # (bucket, fp) is a valid home-bucket insert because the alt mapping
-    # is self-inverse.
-    acc = np.zeros((n_buckets, CUCKOO_SLOTS), dtype=np.uint16)
-    parts = hashed.mapInPandas(
-        to_filter, T.StructType([T.StructField("buckets", T.BinaryType())])
-    ).toLocalIterator()
-    for row in parts:
-        part = np.frombuffer(row["buckets"], dtype=np.uint16).reshape(
-            n_buckets, CUCKOO_SLOTS)
-        bs, ss = np.nonzero(part)
-        _cuckoo_bulk_insert(acc, part[bs, ss], bs, n_buckets)
-    return CuckooFilter(acc, n_buckets)
-
-
-_U64 = (1 << 64) - 1
-
-
-def _pair_u64(h1, h2):
-    # xxhash64 lands in Python as a SIGNED long; mask to two's-complement
-    return (np.array([int(h1) & _U64], dtype=np.uint64),
-            np.array([int(h2) & _U64], dtype=np.uint64))
-
-
-def cuckoo_insert_keys(filt: CuckooFilter, keys) -> None:
-    """Driver-side incremental inserts (the crawl's per-generation novel
-    deltas).  ``keys``: iterable of (h1, h2) xxhash64 pairs (signed or
-    unsigned)."""
-    for h1, h2 in keys:
-        a, b = _pair_u64(h1, h2)
-        fp, b1 = _cuckoo_fp_bucket(a, b, filt.n_buckets)
-        if not _cuckoo_insert_one(filt.buckets, b1[0], fp[0],
-                                  filt.n_buckets):
-            raise ValueError("cuckoo filter over capacity")
-
-
-def cuckoo_delete_keys(filt: CuckooFilter, keys) -> int:
-    """Remove keys (known-inserted; standard cuckoo caveat: a key whose
-    (fingerprint, bucket) collides with another's removes one copy).
-    Returns how many were found+removed."""
-    removed = 0
-    for h1, h2 in keys:
-        a, b = _pair_u64(h1, h2)
-        fp, b1 = _cuckoo_fp_bucket(a, b, filt.n_buckets)
-        f, b = int(fp[0]), int(b1[0])
-        for cand in (b, int(_cuckoo_alt(b, f, filt.n_buckets))):
-            slots = np.flatnonzero(filt.buckets[cand] == f)
-            if slots.size:
-                filt.buckets[cand, slots[0]] = 0
-                removed += 1
-                break
-    return removed
-
-
-def cuckoo_prefilter(candidates: DataFrame, key: str, filt_or_bytes,
-                     n_buckets: int | None = None) -> DataFrame:
-    """Adds ``maybe_seen`` exactly like bloom_prefilter: False => novel.
-    Pass a CuckooFilter (broadcast here) or an already-broadcast bytes
-    handle + n_buckets."""
-    from pyspark.broadcast import Broadcast
-    spark = candidates.sparkSession
-    if isinstance(filt_or_bytes, CuckooFilter):
-        n_buckets = filt_or_bytes.n_buckets
-        bc = spark.sparkContext.broadcast(filt_or_bytes.buckets.tobytes())
-    elif isinstance(filt_or_bytes, Broadcast):
-        bc = filt_or_bytes
-    else:
-        bc = spark.sparkContext.broadcast(filt_or_bytes)
-    nb = n_buckets
-
-    @F.pandas_udf(T.BooleanType())
-    def might_contain(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        buckets = np.frombuffer(bc.value, dtype=np.uint16).reshape(
-            nb, CUCKOO_SLOTS)
-        fp, b1 = _cuckoo_fp_bucket(h1.to_numpy(dtype=np.uint64),
-                                   h2.to_numpy(dtype=np.uint64), nb)
-        b2 = _cuckoo_alt(b1, fp, nb)
-        hit = ((buckets[b1] == fp[:, None]).any(axis=1)
-               | (buckets[b2] == fp[:, None]).any(axis=1))
-        return pd.Series(hit)
-
-    return candidates.withColumn(
-        "maybe_seen",
-        might_contain(F.xxhash64(F.col(key), F.lit(1)),
-                      F.xxhash64(F.col(key), F.lit(2))))
-
-# --------------------------------------------------- sharded cuckoo ----
-
 @dataclass
 class ShardedCuckoo:
-    """Distributed deletable seen-filter — the 10^10 deployment of the
-    cuckoo sidecar, mirroring :class:`ShardedBloom`: the key space is
-    split into ``n_shards`` by key-hash, each shard's (n_buckets, 4)
-    uint16 bucket array living in a ROW of a (shard int, buckets binary)
-    DataFrame.  Build fills each shard in its own ``applyInPandas`` task
-    (no driver merge at all — keys are hash-partitioned to their shard);
-    per-generation delta keys and recrawl expiries are applied by
-    co-grouping the keys with their shard's row; candidates are probed
-    the same way.  Driver memory is O(1) in the key count."""
+    """Partial-key cuckoo filter as a distributed table (north_rule names
+    "bloom/cuckoo"): the key space is split into ``n_shards`` by key
+    hash, each shard's (n_buckets, 4) uint16 bucket array living in a
+    ROW of a (shard int, buckets binary) DataFrame.  Build fills each
+    shard in its own ``applyInPandas`` task (no driver merge — keys are
+    hash-partitioned to their shard); per-generation delta keys are
+    inserted by co-grouping them with their shard's row; candidates are
+    probed the same way.  Driver memory is O(1) in the key count."""
     df: DataFrame
     n_shards: int
     n_buckets: int       # per shard
+
+
+def _shard_col(key: str, n_shards: int):
+    return F.pmod(F.xxhash64(F.col(key), F.lit(0)), F.lit(n_shards)).cast("int")
 
 
 def _cuckoo_hash_cols(key: str):
@@ -585,12 +287,13 @@ def build_sharded_cuckoo(df: DataFrame, key: str, n_shards: int,
     return ShardedCuckoo(bdf, n_shards, n_buckets)
 
 
-def _sharded_cuckoo_apply(filt: ShardedCuckoo, keys: DataFrame, key: str,
-                          op: str) -> ShardedCuckoo:
-    """New filter table with ``keys`` inserted into / deleted from their
-    shards; shards with no keys pass through untouched.  One co-grouped
-    shuffle of the (small) key delta — the bucket table itself moves
-    only between its own shuffle files, never to the driver."""
+def sharded_cuckoo_insert(filt: ShardedCuckoo, keys: DataFrame,
+                          key: str = "urlkey") -> ShardedCuckoo:
+    """New filter table with ``keys`` (the crawl's per-generation novel
+    keys) inserted into their shards; shards with no keys pass through
+    untouched.  One co-grouped shuffle of the (small) key delta — the
+    bucket table itself moves only between its own shuffle files, never
+    to the driver."""
     n_buckets = filt.n_buckets
     hashed = keys.select(_shard_col(key, filt.n_shards).alias("shard"),
                          *_cuckoo_hash_cols(key))
@@ -599,9 +302,6 @@ def _sharded_cuckoo_apply(filt: ShardedCuckoo, keys: DataFrame, key: str,
         if kpdf.empty:
             return bpdf[["shard", "buckets"]]
         if bpdf.empty:
-            if op == "delete":        # nothing stored: nothing to delete
-                return pd.DataFrame({"shard": pd.Series(dtype="int32"),
-                                     "buckets": pd.Series(dtype=object)})
             buckets = np.zeros((n_buckets, CUCKOO_SLOTS), dtype=np.uint16)
         else:
             buckets = (np.frombuffer(bytes(bpdf["buckets"].iloc[0]),
@@ -610,10 +310,7 @@ def _sharded_cuckoo_apply(filt: ShardedCuckoo, keys: DataFrame, key: str,
         fp, b1 = _cuckoo_fp_bucket(kpdf["_h1"].to_numpy(dtype=np.uint64),
                                    kpdf["_h2"].to_numpy(dtype=np.uint64),
                                    n_buckets)
-        if op == "insert":
-            _cuckoo_bulk_insert(buckets, fp, b1, n_buckets)
-        else:
-            _cuckoo_bulk_delete(buckets, fp, b1, n_buckets)
+        _cuckoo_bulk_insert(buckets, fp, b1, n_buckets)
         return pd.DataFrame({"shard": [int(kpdf["shard"].iloc[0])],
                              "buckets": [buckets.tobytes()]})
 
@@ -622,25 +319,12 @@ def _sharded_cuckoo_apply(filt: ShardedCuckoo, keys: DataFrame, key: str,
     return ShardedCuckoo(out, filt.n_shards, n_buckets)
 
 
-def sharded_cuckoo_insert(filt: ShardedCuckoo, keys: DataFrame,
-                          key: str = "urlkey") -> ShardedCuckoo:
-    """Incremental maintenance: the crawl's per-generation novel keys."""
-    return _sharded_cuckoo_apply(filt, keys, key, "insert")
-
-
-def sharded_cuckoo_delete(filt: ShardedCuckoo, keys: DataFrame,
-                          key: str = "urlkey") -> ShardedCuckoo:
-    """Recrawl expiry: remove keys (known-inserted; the standard cuckoo
-    caveat applies — a (fingerprint, bucket) collision removes one copy,
-    which for the SEEN-set contract only re-admits a URL early)."""
-    return _sharded_cuckoo_apply(filt, keys, key, "delete")
-
-
 def sharded_cuckoo_prefilter(candidates: DataFrame, key: str,
                              filt: ShardedCuckoo) -> DataFrame:
-    """Adds ``maybe_seen`` exactly like sharded_bloom_prefilter:
-    candidates hash-partition on shard, each task probes one shard's
-    bucket array; a shard with no row holds no keys."""
+    """Adds ``maybe_seen`` (False ⇒ definitely novel): candidates
+    hash-partition on shard (the same shuffle the exact anti-join would
+    pay anyway, but carrying only candidate rows), each task probes one
+    shard's bucket array; a shard with no row holds no keys."""
     n_buckets = filt.n_buckets
     cand = candidates.select(
         "*", _shard_col(key, filt.n_shards).alias("_shard"),

@@ -8,9 +8,8 @@ Usage:
   python scripts/ab_cfg.py CORES N_PAGES BATCH GENS PAIRS CFG_A CFG_B [SEEDS]
 e.g. the overlap-plan lever at the 3-generation headline shape:
   python scripts/ab_cfg.py 32 200000 50000 3 3 '{}' '{"overlap_plan": true}'
-or bloom vs cuckoo seen filters:
-  python scripts/ab_cfg.py 32 200000 50000 3 3 \
-      '{"bloom_min_keys": 1}' '{"seen_filter": "cuckoo", "bloom_min_keys": 1}'
+or the seen filter engaged from key 1 against the exact anti-join alone:
+  python scripts/ab_cfg.py 4 100000 25000 3 5 '{}' '{"bloom_min_keys": 1}'
 """
 
 from __future__ import annotations
@@ -21,12 +20,23 @@ import statistics
 import subprocess
 import sys
 
-JVM_OPTS = "-Xms12g -XX:+AlwaysPreTouch -XX:+UseParallelGC"
+
+def _heap_gb() -> int:
+    """Driver heap per runner: a quarter of MemTotal (capped at 12 GiB),
+    so the two pre-touched JVMs plus their Python workers fit the host."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    return max(1, min(12, kb // (4 << 20)))
+
+
+HEAP = f"{_heap_gb()}g"
+JVM_OPTS = f"-Xms{HEAP} -XX:+AlwaysPreTouch -XX:+UseParallelGC"
 
 CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
-os.environ["SPARK_GRAFT_DRIVER_MEM"] = "12g"
+os.environ["SPARK_GRAFT_DRIVER_MEM"] = {heap!r}
 from cdx_writer_spark.session import get_spark
 from cdx_writer_spark.sources.synth import synth_pages, synth_robots, synth_seeds
 from cdx_writer_spark.frontier.crawl import CrawlConfig, run_crawl
@@ -61,7 +71,8 @@ def one():
              "cdx": n_cdx,
              "overlapped_gens": sum(1 for m in metrics
                                     if m.get("plan_overlapped")),
-             "steal_frac": round(d[7] / max(3200.0 * dt, 1), 4)}}
+             "steal_frac": round(d[7] / max(100.0 * os.cpu_count() * dt, 1),
+                                 4)}}
 
 one()  # untimed warm
 print("READY", flush=True)
@@ -80,7 +91,7 @@ class Runner:
         self.p = subprocess.Popen(
             [sys.executable, "-u", "-c",
              CHILD.format(repo=repo, tag=tag, cores=cores, n_pages=n_pages,
-                          batch=batch, gens=gens, jvm_opts=JVM_OPTS,
+                          batch=batch, gens=gens, jvm_opts=JVM_OPTS, heap=HEAP,
                           overrides=repr(overrides), seeds=seeds)],
             cwd=repo, text=True, stdin=subprocess.PIPE,
             stdout=subprocess.PIPE, stderr=subprocess.DEVNULL)

@@ -35,8 +35,6 @@ def main() -> None:
     ap.add_argument("--pages", type=int, default=400_000)
     ap.add_argument("--batch", type=int, default=100_000)
     ap.add_argument("--generations", type=int, default=2)
-    ap.add_argument("--seen-filter", default="bloom",
-                    choices=["bloom", "cuckoo"])
     ap.add_argument("--warm", type=int, default=1,
                     help="untimed warm-up runs (JIT + Arrow worker spin-up)")
     args = ap.parse_args()
@@ -89,8 +87,7 @@ def main() -> None:
     pages = synth_pages(spark, args.pages, n_hosts=n_hosts)
     seeds = synth_seeds(spark, args.batch, args.pages, n_hosts=n_hosts)
     robots = synth_robots(spark, n_hosts=n_hosts)
-    cfg = CrawlConfig(per_host_budget=64, global_batch=args.batch,
-                      seen_filter=args.seen_filter)
+    cfg = CrawlConfig(per_host_budget=64, global_batch=args.batch)
 
     def stat() -> list[int]:
         with open("/proc/stat") as f:

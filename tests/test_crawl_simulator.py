@@ -138,8 +138,7 @@ def test_crawl_matches_reference_simulator(spark):
     pages = synth_pages(spark, N_PAGES, partitions=8)
     seeds = synth_seeds(spark, 20, N_PAGES)
     robots = synth_robots(spark)
-    cfg = CrawlConfig(per_host_budget=2, global_batch=200, use_bloom=True,
-                      bloom_min_keys=1)
+    cfg = CrawlConfig(per_host_budget=2, global_batch=200, bloom_min_keys=1)
     gens = 3
 
     f, seen, cdx, _m = run_crawl(spark, pages, seeds, robots, cfg, gens)

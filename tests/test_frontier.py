@@ -1,6 +1,7 @@
 """Frontier correctness: byte-identical text extraction (input_hint
-invariant), deterministic scheduling under repartitioning, bloom-prefilter
-== exact anti-join, robots gating, checkpoint/resume idempotence."""
+invariant), deterministic scheduling under repartitioning, seen-filter
+crawls == exact anti-join crawls, robots gating, checkpoint/resume
+idempotence."""
 
 import shutil
 
@@ -9,7 +10,8 @@ from pyspark.sql import functions as F
 
 from cdx_writer_spark.frontier.crawl import (CrawlConfig, crawl_step,
                                              init_frontier, run_crawl)
-from cdx_writer_spark.frontier.seen import anti_join_seen, build_bloom
+from cdx_writer_spark.frontier.seen import (anti_join_seen, bloom_prefilter,
+                                            build_bloom)
 from cdx_writer_spark.functions.udfs import extract_text
 from cdx_writer_spark.sources.synth import (synth_pages, synth_robots,
                                             synth_seeds)
@@ -26,6 +28,21 @@ def world(spark):
     return pages, seeds, robots
 
 
+@pytest.fixture
+def filter_builds(monkeypatch):
+    """Capacities of the seen-filter (re)builds run_crawl makes."""
+    import cdx_writer_spark.frontier.crawl as crawl_mod
+    builds: list[int] = []
+    real_build = crawl_mod._seen_filter
+
+    def counting_build(seen, capacity):
+        builds.append(capacity)
+        return real_build(seen, capacity)
+
+    monkeypatch.setattr(crawl_mod, "_seen_filter", counting_build)
+    return builds
+
+
 def test_text_extraction_byte_identical(spark, world):
     pages, _, _ = world
     diff = (pages.withColumn("extracted", extract_text("html"))
@@ -35,7 +52,7 @@ def test_text_extraction_byte_identical(spark, world):
 
 def test_crawl_deterministic_under_repartitioning(spark, world):
     pages, seeds, robots = world
-    cfg = CrawlConfig(per_host_budget=2, global_batch=200, use_bloom=False,
+    cfg = CrawlConfig(per_host_budget=2, global_batch=200,
                       collect_metrics=False)
 
     def run(parts):
@@ -52,22 +69,30 @@ def test_crawl_deterministic_under_repartitioning(spark, world):
 
 
 def test_bloom_prefilter_matches_exact(spark):
+    """The driver-global bloom, as the big-batch fetch join uses it: no
+    false negatives, so pre-filtering on ``maybe_seen`` and then joining
+    exactly keeps every match; the exact anti-join is the complement."""
     seen = spark.range(0, 3000).select(
         F.concat(F.lit("key"), F.col("id")).alias("urlkey"))
     cand = spark.range(2000, 5000).select(
         F.concat(F.lit("key"), F.col("id")).alias("urlkey"))
-    bloom = build_bloom(seen, "urlkey", capacity=3000, fpp=0.01)
+    b, m, k = build_bloom(seen, "urlkey", capacity=3000, fpp=0.01)
+    flagged = bloom_prefilter(cand, "urlkey", b, m, k)
+    assert (flagged.join(seen, "urlkey", "left_semi")
+            .filter(~F.col("maybe_seen")).count()) == 0, "false negative"
     exact = sorted(r["urlkey"] for r in
-                   anti_join_seen(cand, seen, "urlkey").collect())
-    with_bloom = sorted(r["urlkey"] for r in
-                        anti_join_seen(cand, seen, "urlkey", bloom=bloom).collect())
-    assert exact == with_bloom
-    assert len(exact) == 2000
+                   cand.join(seen, "urlkey", "left_semi").collect())
+    via_bloom = sorted(r["urlkey"] for r in
+                       flagged.filter("maybe_seen").drop("maybe_seen")
+                       .join(seen, "urlkey", "left_semi").collect())
+    assert exact == via_bloom
+    assert len(exact) == 1000
+    assert anti_join_seen(cand, seen, "urlkey").count() == 2000
 
 
 def test_robots_gate_blocks_banned_paths(spark, world):
     pages, seeds, robots = world
-    cfg = CrawlConfig(per_host_budget=2, global_batch=300, use_bloom=False,
+    cfg = CrawlConfig(per_host_budget=2, global_batch=300,
                       collect_metrics=False)
     frontier = init_frontier(seeds)
     seen = frontier.select("urlkey")
@@ -82,7 +107,7 @@ def test_robots_gate_blocks_banned_paths(spark, world):
 
 def test_checkpoint_resume_no_reemission(spark, world, tmp_path):
     pages, seeds, robots = world
-    cfg = CrawlConfig(per_host_budget=2, global_batch=200, use_bloom=False)
+    cfg = CrawlConfig(per_host_budget=2, global_batch=200)
     ckpt = str(tmp_path / "crawl_ckpt")
 
     _f, _s, cdx_full, _m = run_crawl(spark, pages, seeds, robots, cfg, 3,
@@ -118,71 +143,6 @@ def test_distributed_top_k_exact(spark):
     assert g == e
 
 
-def test_sharded_bloom_matches_exact_at_1m_keys(spark):
-    """Sharded (shard, bitmap)-table bloom: parity with the exact anti-join
-    at 10^6 keys.  Driver never holds a bitmap — its memory is O(1) in the
-    key count (the global-bloom design collected ~1.2 MB/10^6 keys and
-    would collect ~12 GB at 10^10)."""
-    from cdx_writer_spark.frontier.seen import build_sharded_bloom
-    seen = spark.range(1_000_000).select(
-        F.concat(F.lit("key"), F.col("id")).alias("urlkey"))
-    cand = spark.range(500_000, 1_500_000).select(
-        F.concat(F.lit("key"), F.col("id")).alias("urlkey"),
-        (F.col("id") % 7).alias("prio"))
-    sb = build_sharded_bloom(seen, "urlkey", n_shards=64, capacity=2_000_000)
-    exact = anti_join_seen(cand, seen, "urlkey")
-    with_bloom = anti_join_seen(cand, seen, "urlkey", bloom=sb)
-    assert with_bloom.count() == 500_000
-    assert exact.select("urlkey").exceptAll(
-        with_bloom.select("urlkey")).count() == 0
-    assert with_bloom.select("urlkey").exceptAll(
-        exact.select("urlkey")).count() == 0
-
-
-def test_sharded_bloom_merge_covers_delta(spark):
-    from cdx_writer_spark.frontier.seen import (build_sharded_bloom,
-                                                merge_sharded_blooms,
-                                                sharded_bloom_prefilter)
-    a = spark.range(0, 5000).select(
-        F.concat(F.lit("k"), F.col("id")).alias("urlkey"))
-    b = spark.range(5000, 10000).select(
-        F.concat(F.lit("k"), F.col("id")).alias("urlkey"))
-    sb = build_sharded_bloom(a, "urlkey", n_shards=8, capacity=40_000)
-    delta = build_sharded_bloom(b, "urlkey", n_shards=8, capacity=1,
-                                m=sb.m, k=sb.k)
-    merged = merge_sharded_blooms(sb, delta)
-    # every key of both halves must be maybe_seen (no false negatives)
-    flagged = sharded_bloom_prefilter(a.unionByName(b), "urlkey", merged)
-    assert flagged.filter(~F.col("maybe_seen")).count() == 0
-
-
-@pytest.mark.parametrize("mode", ["sharded", "global_amortized"])
-def test_crawl_with_bloom_equals_exact(spark, world, mode):
-    """The crawl must produce identical seen/cdx with any bloom deployment:
-    the filter is an optimization, never a semantics change.  The
-    global_amortized case forces the stale-broadcast window (rebroadcast
-    threshold never reached), exercising the `recent` exact side table."""
-    pages, seeds, robots = world
-    base = dict(per_host_budget=2, global_batch=200)
-    cfg_exact = CrawlConfig(use_bloom=False, **base)
-    if mode == "sharded":
-        cfg_bloom = CrawlConfig(use_bloom=True, bloom_min_keys=1,
-                                bloom_shards=8, **base)
-    else:
-        cfg_bloom = CrawlConfig(use_bloom=True, bloom_min_keys=1,
-                                bloom_rebroadcast_keys=10**9, **base)
-
-    def run(cfg):
-        f, seen, cdx, m = run_crawl(spark, pages, seeds, robots, cfg, 3)
-        return (sorted(r["urlkey"] for r in seen.collect()),
-                sorted((r["urlkey"], r["generation"])
-                       for r in cdx.collect()))
-    e = run(cfg_exact)
-    b = run(cfg_bloom)
-    assert e[0] == b[0], f"seen-set differs under {mode} bloom"
-    assert e[1] == b[1], f"cdx differs under {mode} bloom"
-
-
 def test_legacy_checkpoint_full_snapshot_load(spark, tmp_path):
     """Checkpoints from the pre-delta format (manifest without
     seen_format) stored the FULL seen set each generation; load_state must
@@ -213,10 +173,10 @@ def test_fused_generations_equal_unfused(spark, world):
     """The fused small-generation mode (2 jobs/gen, lazy checkpoints, seen
     delta derived from the frontier snapshot) must be result-identical to
     the fully-materialized big-generation path — it is a scheduling
-    change, never a semantics change.  Covers both bloom and exact modes."""
+    change, never a semantics change.  Covers the exact join alone and
+    with the seen filter live from the first key."""
     pages, seeds, robots = world
-    for bloom_kw in (dict(use_bloom=False),
-                     dict(use_bloom=True, bloom_min_keys=1)):
+    for bloom_kw in (dict(), dict(bloom_min_keys=1)):
         base = dict(per_host_budget=2, global_batch=200, **bloom_kw)
         cfg_fused = CrawlConfig(fuse_below_rows=10**9, **base)
         cfg_big = CrawlConfig(fuse_below_rows=0, **base)
@@ -240,7 +200,7 @@ def test_checkpoint_blocks_actually_freed(spark, world):
     4.1.2; the loop must free them via util.free_checkpoint or the block
     store grows monotonically.  Bound what survives a 3-generation crawl:
     per generation only parsed (backs the returned cdx) and the seen-part
-    handle may remain, plus the live frontier and bloom state."""
+    handle may remain, plus the live frontier and seen-filter table."""
     sc = spark.sparkContext
 
     def n_persisted():
@@ -248,8 +208,7 @@ def test_checkpoint_blocks_actually_freed(spark, world):
 
     pages, seeds, robots = world
     before = n_persisted()
-    cfg = CrawlConfig(per_host_budget=2, global_batch=200, use_bloom=True,
-                      bloom_min_keys=1)
+    cfg = CrawlConfig(per_host_budget=2, global_batch=200, bloom_min_keys=1)
     gens = 3
     run_crawl(spark, pages, seeds, robots, cfg, gens)
     survivors = n_persisted() - before
@@ -324,26 +283,27 @@ def test_mixed_legacy_then_delta_checkpoint_load(spark, tmp_path):
     assert seen.distinct().count() == 120
 
 
-def test_bloom_auto_shards_mid_run(spark, world):
-    """With bloom_shards=0 the crawl auto-flips from the global broadcast
-    bloom to the sharded (shard,bitmap) table once the seen set crosses
-    bloom_auto_shard_keys — config-free 10^10 path.  Crossing mid-run
-    must not change any result (the flip is just a rebuild)."""
+def test_bloom_auto_shards_mid_run(spark, world, filter_builds):
+    """The seen filter (its shard count auto-sized from capacity) first
+    engages mid-run, once the seen set crosses bloom_min_keys: the early
+    generations run the exact join alone, the later ones through the
+    filter.  Engaging must not change any result."""
     pages, seeds, robots = world
     base = dict(per_host_budget=2, global_batch=200)
-    cfg_exact = CrawlConfig(use_bloom=False, **base)
-    # threshold sits between gen-0 seen (~20 seeds + first novelties) and
-    # the final seen count, so the run starts global and flips sharded
-    cfg_auto = CrawlConfig(use_bloom=True, bloom_min_keys=1,
-                           bloom_auto_shard_keys=200, **base)
 
     def run(cfg):
         f, seen, cdx, m = run_crawl(spark, pages, seeds, robots, cfg, 3)
         return (sorted(r["urlkey"] for r in seen.collect()),
                 sorted((r["urlkey"], r["generation"]) for r in cdx.collect()))
-    e, a = run(cfg_exact), run(cfg_auto)
-    assert e[0] == a[0], "seen differs after auto-shard flip"
-    assert e[1] == a[1], "cdx differs after auto-shard flip"
+    e = run(CrawlConfig(**base))
+    assert not filter_builds, "the default threshold must keep the filter off"
+    # the threshold sits between gen-0 seen (20 seeds) and the final seen
+    # count, so generation 0 runs without the filter and a later one with
+    a = run(CrawlConfig(bloom_min_keys=200, **base))
+    assert filter_builds and filter_builds[0] >= 4 * 200, \
+        f"the filter never engaged mid-run: {filter_builds}"
+    assert e[0] == a[0], "seen differs once the filter engages"
+    assert e[1] == a[1], "cdx differs once the filter engages"
 
 
 def test_robots_rules_parser(spark):
@@ -383,7 +343,7 @@ def test_big_batch_join_path_equals_broadcast(spark, world):
     fetch + shuffle leftover anti-join) must be result-identical to the
     broadcast path — join strategy is a cost decision, not semantics."""
     pages, seeds, robots = world
-    base = dict(per_host_budget=2, global_batch=200, use_bloom=False)
+    base = dict(per_host_budget=2, global_batch=200)
     def run(cfg):
         f, seen, cdx, m = run_crawl(spark, pages, seeds, robots, cfg, 3)
         return (sorted(r["urlkey"] for r in seen.collect()),
@@ -413,7 +373,7 @@ def test_crawl_delay_budgets(spark, world):
     assert got == {"site0.example.org": 2,      # 60/30
                    "site1.example.org": 4}      # 120 clamped to default
 
-    cfg = CrawlConfig(per_host_budget=4, global_batch=500, use_bloom=False)
+    cfg = CrawlConfig(per_host_budget=4, global_batch=500)
     f, seen, cdx, m = run_crawl(spark, pages, seeds, robots, cfg, 2,
                                 host_budgets=budgets)
     per_host = (cdx.join(
@@ -446,75 +406,11 @@ def test_async_saver_propagates_failures():
         crawl_mod.save_state = orig
 
 
-def test_cuckoo_filter_matches_exact(spark):
-    """Cuckoo sidecar contract: NO false negatives ever (every inserted
-    key reads maybe_seen=True), sane false-positive rate, and anti-join
-    results identical to the exact join."""
-    from cdx_writer_spark.frontier.seen import (anti_join_seen,
-                                                build_cuckoo,
-                                                cuckoo_prefilter)
-    seen = spark.range(0, 30000).select(
-        F.concat(F.lit("key"), F.col("id")).alias("urlkey"))
-    cand = spark.range(20000, 50000).select(
-        F.concat(F.lit("key"), F.col("id")).alias("urlkey"))
-    filt = build_cuckoo(seen, "urlkey", capacity=60000)
-
-    flagged = cuckoo_prefilter(seen, "urlkey", filt)
-    assert flagged.filter(~F.col("maybe_seen")).count() == 0, \
-        "false negative: an inserted key read as definitely-novel"
-    fp = (cuckoo_prefilter(
-        spark.range(10**6, 10**6 + 20000).select(
-            F.concat(F.lit("key"), F.col("id")).alias("urlkey")),
-        "urlkey", filt).filter("maybe_seen").count())
-    assert fp / 20000 < 0.05, f"false-positive rate too high: {fp/20000}"
-
-    exact = sorted(r["urlkey"] for r in
-                   anti_join_seen(cand, seen, "urlkey").collect())
-    got = sorted(r["urlkey"] for r in
-                 anti_join_seen(cand, seen, "urlkey", bloom=filt).collect())
-    assert got == exact
-
-
-def test_cuckoo_insert_delete(spark):
-    """The cuckoo extra over blooms: deletion.  Insert, delete half,
-    remaining keys must still never read novel; deleted keys mostly
-    vanish (fingerprint collisions may retain a few)."""
-    import numpy as np
-    from cdx_writer_spark.frontier.seen import (CuckooFilter,
-                                                _cuckoo_fp_bucket,
-                                                build_cuckoo,
-                                                cuckoo_delete_keys,
-                                                cuckoo_prefilter)
-    keys = spark.range(0, 4000).select(
-        F.concat(F.lit("u"), F.col("id")).alias("urlkey"))
-    filt = build_cuckoo(keys, "urlkey", capacity=10000)
-    hashed = keys.select(
-        F.xxhash64("urlkey", F.lit(1)).alias("h1"),
-        F.xxhash64("urlkey", F.lit(2)).alias("h2"),
-        (F.regexp_extract("urlkey", r"u(\d+)", 1).cast("long") % 2 == 0)
-        .alias("even")).collect()
-    to_delete = [(r["h1"], r["h2"]) for r in hashed if r["even"]]
-    n = cuckoo_delete_keys(filt, to_delete)
-    assert n == len(to_delete)
-    odd = keys.filter(
-        F.regexp_extract("urlkey", r"u(\d+)", 1).cast("long") % 2 == 1)
-    missing = cuckoo_prefilter(odd, "urlkey", filt) \
-        .filter(~F.col("maybe_seen")).count()
-    # a remaining key can only vanish if a deleted twin shared its
-    # (fingerprint, bucket) — rare at this load
-    assert missing <= 2, f"{missing} remaining keys vanished"
-    even = keys.filter(
-        F.regexp_extract("urlkey", r"u(\d+)", 1).cast("long") % 2 == 0)
-    still = cuckoo_prefilter(even, "urlkey", filt) \
-        .filter(F.col("maybe_seen")).count()
-    assert still / 2000 < 0.05, f"deleted keys still present: {still}"
-
-
 def test_crawl_with_cuckoo_equals_exact(spark, world):
-    """The crawl with a cuckoo seen-filter sidecar == exact anti-join
-    crawl — same guarantee the bloom deployments carry."""
+    """crawl_step driven directly with a sharded cuckoo built over the
+    seen set each generation == the exact anti-join crawl."""
     from cdx_writer_spark.frontier import crawl as crawl_mod
-    from cdx_writer_spark.frontier.seen import build_cuckoo
+    from cdx_writer_spark.frontier.seen import build_sharded_cuckoo
     pages, seeds, robots = world
     base = dict(per_host_budget=2, global_batch=200)
 
@@ -530,7 +426,8 @@ def test_crawl_with_cuckoo_equals_exact(spark, world):
         seen = frontier.select("urlkey")
         cdx_parts = []
         for gen in range(2):
-            filt = build_cuckoo(seen, "urlkey", capacity=200000)
+            filt = build_sharded_cuckoo(seen, "urlkey", n_shards=4,
+                                        capacity=200000)
             frontier, new_seen, cdx, m = crawl_mod.crawl_step(
                 pages, frontier, seen, robots, cfg, gen, bloom=filt)
             frontier = frontier.localCheckpoint(eager=True)
@@ -543,39 +440,10 @@ def test_crawl_with_cuckoo_equals_exact(spark, world):
                 sorted((r["urlkey"], r["generation"])
                        for r in all_cdx.collect()))
 
-    e = run(CrawlConfig(use_bloom=False, **base))
-    c = run(CrawlConfig(use_bloom=False, **base), bloom_override=True)
+    e = run(CrawlConfig(**base))
+    c = run(CrawlConfig(**base), bloom_override=True)
     assert e[0] == c[0], "seen differs under cuckoo sidecar"
     assert e[1] == c[1], "cdx differs under cuckoo sidecar"
-
-
-def test_cuckoo_deletion_enables_recrawl(spark):
-    """The recrawl flow the cuckoo filter exists for: expire a URL by
-    deleting it from BOTH the exact seen table and the filter, and the
-    seen anti-join re-admits it as a candidate; with a bloom this would
-    require a full filter rebuild."""
-    from cdx_writer_spark.frontier.seen import (anti_join_seen,
-                                                build_cuckoo,
-                                                cuckoo_delete_keys)
-    seen = spark.range(0, 5000).select(
-        F.concat(F.lit("u"), F.col("id")).alias("urlkey"))
-    filt = build_cuckoo(seen, "urlkey", capacity=20000)
-    cand = spark.range(0, 5000, 500).select(
-        F.concat(F.lit("u"), F.col("id")).alias("urlkey"))
-    # nothing novel while everything is seen
-    assert anti_join_seen(cand, seen, "urlkey", bloom=filt).count() == 0
-
-    # expire u1000 and u2500: remove from the exact table AND the filter
-    expired = ["u1000", "u2500"]
-    pairs = (spark.createDataFrame([(k,) for k in expired], ["urlkey"])
-             .select(F.xxhash64("urlkey", F.lit(1)).alias("h1"),
-                     F.xxhash64("urlkey", F.lit(2)).alias("h2")).collect())
-    assert cuckoo_delete_keys(filt, [(r["h1"], r["h2"]) for r in pairs]) == 2
-    seen2 = seen.filter(~F.col("urlkey").isin(expired))
-    got = sorted(r["urlkey"] for r in
-                 anti_join_seen(cand, seen2, "urlkey", bloom=filt).collect())
-    assert got == sorted(expired), \
-        "expired URLs must be re-admitted through the filter + exact join"
 
 
 def test_robots_gate_allow_overrides_disallow(spark):
@@ -654,14 +522,13 @@ def test_resume_after_midgeneration_kill_autoshard(spark, world, tmp_path,
                                                    monkeypatch):
     """Kill the loop BETWEEN gen 1's checkpoint write and that
     generation's block-freeing (write durable on disk, frees never ran),
-    then resume with the sharded-bloom auto-flip active the whole time.
+    then resume with the seen filter live from the first key.
     Resume must redo exactly gen 2, re-emit no earlier urlkey, and land
     on the same seen set and frontier as an uninterrupted run."""
     import cdx_writer_spark.frontier.crawl as crawl_mod
     pages, seeds, robots = world
     ckpt = str(tmp_path / "kill_ckpt")
-    cfg = CrawlConfig(per_host_budget=2, global_batch=200,
-                      bloom_min_keys=1, bloom_auto_shard_keys=1)
+    cfg = CrawlConfig(per_host_budget=2, global_batch=200, bloom_min_keys=1)
 
     saved: list[int] = []
     real_save = crawl_mod.save_state
@@ -705,11 +572,10 @@ def test_sharded_cuckoo_matches_exact_1m_keys(spark):
     """The 10^10-path cuckoo: (shard, buckets) table at 10^6 keys, O(1)
     driver memory (no driver merge loop — the build never collects).
     No false negatives, sane fp rate, anti-join == exact, and the
-    insert/delete co-group ops preserve the contract (delete leaves
-    holes; a later insert must fill them without clobbering)."""
+    co-grouped insert into the existing table preserves the contract
+    (new keys land without clobbering stored ones)."""
     from cdx_writer_spark.frontier.seen import (anti_join_seen,
                                                 build_sharded_cuckoo,
-                                                sharded_cuckoo_delete,
                                                 sharded_cuckoo_insert,
                                                 sharded_cuckoo_prefilter)
     n = 1_000_000
@@ -736,30 +602,77 @@ def test_sharded_cuckoo_matches_exact_1m_keys(spark):
                  anti_join_seen(cand, seen, "urlkey", bloom=filt).collect())
     assert got == exact
 
-    # delete a stripe, insert a new stripe into the holes
-    dele = spark.range(0, 40000, 2).select(
-        F.concat(F.lit("key"), F.col("id")).alias("urlkey"))
-    filt2 = sharded_cuckoo_delete(filt, dele, "urlkey")
+    # insert a new stripe into the existing table
     newk = spark.range(10**9, 10**9 + 20000).select(
         F.concat(F.lit("key"), F.col("id")).alias("urlkey"))
-    filt3 = sharded_cuckoo_insert(filt2, newk, "urlkey")
-    keep = spark.range(1, 40000, 2).select(
-        F.concat(F.lit("key"), F.col("id")).alias("urlkey"))
-    assert (sharded_cuckoo_prefilter(keep, "urlkey", filt3)
-            .filter(~F.col("maybe_seen")).count()) <= 3, \
-        "surviving keys vanished after the delete/insert cycle"
-    assert (sharded_cuckoo_prefilter(newk, "urlkey", filt3)
+    filt2 = sharded_cuckoo_insert(filt, newk, "urlkey")
+    assert (sharded_cuckoo_prefilter(sample, "urlkey", filt2)
             .filter(~F.col("maybe_seen")).count()) == 0, \
-        "hole-filling insert lost keys"
-    gone = (sharded_cuckoo_prefilter(dele, "urlkey", filt3)
-            .filter("maybe_seen").count())
-    assert gone / 20000 < 0.05, f"deleted keys still present: {gone}"
+        "stored keys vanished after the insert"
+    assert (sharded_cuckoo_prefilter(newk, "urlkey", filt2)
+            .filter(~F.col("maybe_seen")).count()) == 0, \
+        "the insert lost keys"
 
 
-def test_run_crawl_cuckoo_filter_equals_exact(spark, world):
-    """seen_filter='cuckoo' runs the sharded cuckoo through the WHOLE
-    loop (build, per-generation inserts, prefilter) with results
-    identical to the exact anti-join crawl."""
+def test_cuckoo_filter_matches_exact(spark):
+    """Cuckoo sidecar contract at a size that runs in seconds: NO false
+    negatives ever (every inserted key reads maybe_seen=True), sane
+    false-positive rate, and anti-join results identical to the exact
+    join."""
+    from cdx_writer_spark.frontier.seen import (build_sharded_cuckoo,
+                                                sharded_cuckoo_prefilter)
+    seen = spark.range(0, 30000).select(
+        F.concat(F.lit("key"), F.col("id")).alias("urlkey"))
+    cand = spark.range(20000, 50000).select(
+        F.concat(F.lit("key"), F.col("id")).alias("urlkey"))
+    filt = build_sharded_cuckoo(seen, "urlkey", n_shards=4, capacity=60000)
+
+    flagged = sharded_cuckoo_prefilter(seen, "urlkey", filt)
+    assert flagged.filter(~F.col("maybe_seen")).count() == 0, \
+        "false negative: an inserted key read as definitely-novel"
+    fp = (sharded_cuckoo_prefilter(
+        spark.range(10**6, 10**6 + 20000).select(
+            F.concat(F.lit("key"), F.col("id")).alias("urlkey")),
+        "urlkey", filt).filter("maybe_seen").count())
+    assert fp / 20000 < 0.05, f"false-positive rate too high: {fp/20000}"
+
+    exact = sorted(r["urlkey"] for r in
+                   anti_join_seen(cand, seen, "urlkey").collect())
+    got = sorted(r["urlkey"] for r in
+                 anti_join_seen(cand, seen, "urlkey", bloom=filt).collect())
+    assert got == exact
+
+
+@pytest.mark.parametrize("mode", ["sharded"])
+def test_crawl_with_bloom_equals_exact(spark, world, filter_builds, mode):
+    """The crawl must produce identical seen/cdx with every filter it
+    deploys switched on at once: the filters are an optimization, never
+    a semantics change.  ``mode`` names the seen-filter deployment — the
+    sharded cuckoo, engaged from the first seen key — and the big-batch
+    fetch path adds its bloom over the batch's urls on the web side."""
+    pages, seeds, robots = world
+    base = dict(per_host_budget=2, global_batch=200)
+    cfg_exact = CrawlConfig(**base)
+    cfg_filtered = CrawlConfig(bloom_min_keys=1, broadcast_batch_max_rows=0,
+                               **base)
+
+    def run(cfg):
+        f, seen, cdx, m = run_crawl(spark, pages, seeds, robots, cfg, 3)
+        return (sorted(r["urlkey"] for r in seen.collect()),
+                sorted((r["urlkey"], r["generation"])
+                       for r in cdx.collect()))
+    e = run(cfg_exact)
+    assert not filter_builds
+    b = run(cfg_filtered)
+    assert filter_builds, f"vacuous: the {mode} seen filter never engaged"
+    assert e[0] == b[0], f"seen-set differs under {mode} filter"
+    assert e[1] == b[1], f"cdx differs under {mode} filter"
+
+
+def test_run_crawl_cuckoo_filter_equals_exact(spark, world, filter_builds):
+    """bloom_min_keys=1 runs the sharded cuckoo through the WHOLE loop
+    (build at generation 0, per-generation inserts, prefilter) with
+    results identical to the exact anti-join crawl."""
     pages, seeds, robots = world
     base = dict(per_host_budget=2, global_batch=200)
 
@@ -769,8 +682,10 @@ def test_run_crawl_cuckoo_filter_equals_exact(spark, world):
                 sorted((r["urlkey"], r["generation"]) for r in cdx.collect()),
                 sorted(tuple(r) for r in f.collect()))
 
-    e = run(CrawlConfig(use_bloom=False, **base))
-    c = run(CrawlConfig(seen_filter="cuckoo", bloom_min_keys=1, **base))
+    e = run(CrawlConfig(**base))
+    assert not filter_builds
+    c = run(CrawlConfig(bloom_min_keys=1, **base))
+    assert filter_builds, "vacuous: the filter never engaged"
     assert e[0] == c[0], "seen differs under loop cuckoo filter"
     assert e[1] == c[1], "cdx differs under loop cuckoo filter"
     assert e[2] == c[2], "frontier differs under loop cuckoo filter"
@@ -797,8 +712,8 @@ def test_run_crawl_cuckoo_survives_capacity_overflow(spark):
                 sorted((r["urlkey"], r["generation"]) for r in cdx.collect()),
                 [x["novel"] for x in m])
 
-    e = run(CrawlConfig(use_bloom=False, **base))
-    c = run(CrawlConfig(seen_filter="cuckoo", bloom_min_keys=1, **base))
+    e = run(CrawlConfig(**base))
+    c = run(CrawlConfig(bloom_min_keys=1, **base))
     # the shape must actually exercise the overflow path: replay the
     # loop's own sizing rule (cap = 4x keys at every (re)build) over the
     # observed novel-per-generation sequence and require that some
@@ -818,15 +733,15 @@ def test_run_crawl_cuckoo_survives_capacity_overflow(spark):
 
 def test_recrawl_expiry_through_loop(spark, world, tmp_path):
     """Recrawl THROUGH run_crawl: expire previously-crawled urlkeys at
-    resume; with seen_filter='cuckoo' the expiry is a sharded DELETE
-    against the live filter (no rebuild), and the resumed crawl must
-    (a) match the exact-join crawl row-for-row and (b) actually
-    re-emit rediscovered expired URLs."""
+    resume with the seen filter live from the first key (it is built
+    over the post-expiry seen set); the resumed crawl must (a) match the
+    exact-join crawl row-for-row and (b) actually re-emit rediscovered
+    expired URLs."""
     import shutil as _sh
     pages, seeds, robots = world
     base = dict(per_host_budget=2, global_batch=200)
-    cfg_ck = CrawlConfig(seen_filter="cuckoo", bloom_min_keys=1, **base)
-    cfg_ex = CrawlConfig(use_bloom=False, **base)
+    cfg_ck = CrawlConfig(bloom_min_keys=1, **base)
+    cfg_ex = CrawlConfig(**base)
 
     d1 = str(tmp_path / "ck")
     run_crawl(spark, pages, seeds, robots, cfg_ck, 2, checkpoint_dir=d1)
@@ -848,7 +763,7 @@ def test_recrawl_expiry_through_loop(spark, world, tmp_path):
 
     ck = finish(cfg_ck, d1)
     ex = finish(cfg_ex, str(tmp_path / "ex"))
-    assert ck == ex, "cuckoo-delete resume differs from exact resume"
+    assert ck == ex, "filtered expiry resume differs from exact resume"
     re_emitted = {k for k, _ in ck[1]} & \
         {r["urlkey"] for r in expired.collect()}
     assert re_emitted, "no expired URL was re-emitted (vacuous recrawl)"
@@ -911,7 +826,7 @@ def test_checkpoint_frontier_sorted_partitions_with_lineage(spark, world,
     import pyarrow.parquet as pq
 
     pages, seeds, robots = world
-    cfg = CrawlConfig(per_host_budget=2, global_batch=200, use_bloom=False)
+    cfg = CrawlConfig(per_host_budget=2, global_batch=200)
     ckpt = str(tmp_path / "sorted_ckpt")
     run_crawl(spark, pages, seeds, robots, cfg, 2, checkpoint_dir=ckpt)
 
@@ -1037,7 +952,7 @@ def test_expiry_tombstone_persists_across_resumes(spark, world, tmp_path):
     from cdx_writer_spark.frontier.crawl import load_state
 
     pages, seeds, robots = world
-    cfg = CrawlConfig(use_bloom=False, per_host_budget=2, global_batch=200)
+    cfg = CrawlConfig(per_host_budget=2, global_batch=200)
     d = str(tmp_path / "tomb")
     run_crawl(spark, pages, seeds, robots, cfg, 2, checkpoint_dir=d)
     expired_df = (spark.read.parquet(f"{d}/gen=00000/cdx",
@@ -1181,28 +1096,55 @@ def test_overlap_plan_parity_and_engagement(spark, world):
         f"expected both eligible generations to use pre-built plans: " \
         f"{[(m.get('plan_overlapped'), m.get('overlap_discarded')) for m in ovl[3]]}"
 
-    # bloom active from the first keys: the global filter object is
-    # rebuilt/flushed along the way; validation must catch any change
-    seq_b = run(CrawlConfig(overlap_plan=False, bloom_min_keys=1,
-                            bloom_rebroadcast_keys=1, **base))
-    ovl_b = run(CrawlConfig(overlap_plan=True, bloom_min_keys=1,
-                            bloom_rebroadcast_keys=1, **base))
+    # seen filter live from the first key: its per-generation insert
+    # replaces the filter object, so no generation may use (or build) a
+    # speculative plan, and the results must still match
+    seq_b = run(CrawlConfig(overlap_plan=False, bloom_min_keys=1, **base))
+    ovl_b = run(CrawlConfig(overlap_plan=True, bloom_min_keys=1, **base))
     assert seq_b[:3] == ovl_b[:3], \
         "overlap_plan changed results under live-filter maintenance"
+    assert not any(m.get("plan_overlapped") for m in ovl_b[3]), \
+        "a generation overlapped while the seen filter was live"
+
+
+def test_sharded_cuckoo_overflow_recognised_through_spark(spark):
+    """A real shard overflow, raised in a Python worker, reaches the
+    driver wrapped in Spark's own exception; is_cuckoo_overflow must
+    still recognise it (run_crawl's escalation keys on it)."""
+    from cdx_writer_spark.frontier.seen import (CuckooOverflow,
+                                                build_sharded_cuckoo,
+                                                is_cuckoo_overflow,
+                                                sharded_cuckoo_insert)
+
+    def keys(lo, hi):
+        return spark.range(lo, hi).select(
+            F.concat(F.lit("k"), F.col("id")).alias("urlkey"))
+
+    # two shards of 128 buckets x 4 slots: 5000 keys cannot fit
+    filt = build_sharded_cuckoo(keys(0, 100), "urlkey", n_shards=2,
+                                capacity=2)
+    grown = sharded_cuckoo_insert(filt, keys(100, 5000), "urlkey")
+    with pytest.raises(Exception) as info:
+        grown.df.localCheckpoint(eager=True)
+    assert not isinstance(info.value, CuckooOverflow), \
+        "expected the overflow wrapped by Spark, not the raw exception"
+    assert is_cuckoo_overflow(info.value), repr(info.value)[:500]
+    assert not is_cuckoo_overflow(ValueError("some other failure"))
 
 
 def test_cuckoo_insert_shard_overflow_falls_back_to_rebuild(
         spark, world, monkeypatch):
-    """A per-shard 'cuckoo filter over capacity' failure during the
-    incremental delta insert (possible under urlkey-hash skew even when
-    the GLOBAL seen count is under bloom_cap) must trigger a full
-    rebuild with fresh headroom, not kill the loop — and the crawl's
-    output must be unchanged."""
+    """A per-shard overflow during the incremental delta insert
+    (possible under urlkey-hash skew even when the GLOBAL seen count is
+    under the filter's capacity) must trigger a full rebuild with fresh
+    headroom, not kill the loop — and the crawl's output must be
+    unchanged.  The overflow is real: the first insert adds every delta
+    key nine times, and one fingerprint fits in at most the 8 slots of
+    its two buckets."""
     from cdx_writer_spark.frontier import seen as seen_mod
     from cdx_writer_spark.frontier.crawl import CrawlConfig, run_crawl
     pages, seeds, robots = world
-    base = dict(per_host_budget=2, global_batch=200, seen_filter="cuckoo",
-                bloom_min_keys=1)
+    base = dict(per_host_budget=2, global_batch=200, bloom_min_keys=1)
 
     def cdx_set(cdx):
         return sorted((r["urlkey"], r["generation"]) for r in cdx.collect())
@@ -1214,28 +1156,18 @@ def test_cuckoo_insert_shard_overflow_falls_back_to_rebuild(
     real_insert = seen_mod.sharded_cuckoo_insert
     boom = {"armed": True, "fired": 0}
 
-    def failing_insert(filt, keys, key="urlkey"):
-        newf = real_insert(filt, keys, key)
+    def overflowing_insert(filt, keys, key="urlkey"):
         if not boom["armed"]:
-            return newf
+            return real_insert(filt, keys, key)
         boom["armed"] = False
         boom["fired"] += 1
+        nine = keys.crossJoin(spark.range(9)).drop("id")
+        return real_insert(filt, nine, key)
 
-        class _Df:
-            def localCheckpoint(self, eager=True):
-                raise ValueError(
-                    "PythonException: cuckoo filter over capacity")
-
-        class _Newf:
-            df = _Df()
-            n_shards = newf.n_shards
-            n_buckets = newf.n_buckets
-
-        return _Newf()
-
-    monkeypatch.setattr(seen_mod, "sharded_cuckoo_insert", failing_insert)
+    monkeypatch.setattr(seen_mod, "sharded_cuckoo_insert",
+                        overflowing_insert)
     _f, _s, cdx1, m1 = run_crawl(spark, pages, seeds, robots,
                                  CrawlConfig(**base), 3)
-    assert boom["fired"] == 1, "the failure injection never fired"
+    assert boom["fired"] == 1, "the overflowing insert never ran"
     assert cdx_set(cdx1) == expected, \
         "overflow fallback changed the crawl output"
