@@ -20,8 +20,9 @@ Scale notes (10^10 frontier):
   (frontier/seen.py) starts pre-filtering its probe side; the big-batch
   fetch join is bloom-prefiltered over the batch's urls so the web side
   shuffles ~|batch| rows, never |web|;
-* small generations run FUSED (two jobs via lazy localCheckpoints —
-  see crawl_step); checkpoint-block storage is freed deterministically
+* every generation, fresh or resumed and at any frontier size, runs as
+  one heavy job plus a trivial count (lazy localCheckpoints — see
+  crawl_step); checkpoint-block storage is freed deterministically
   with util.free_checkpoint, never left to JVM GC;
 * per-generation state is written as parquet snapshots (frontier, seen
   DELTA, cdx, metrics + manifest-last) = the checkpoint, asynchronously
@@ -47,6 +48,39 @@ __all__ = ["CrawlConfig", "init_frontier", "crawl_step", "run_crawl",
            "load_state", "page_cdx", "frontier_top"]
 
 N_SALT = 16
+
+# Size gates.  Each is a module constant, not a CrawlConfig field: no
+# caller sets a different value, and tests monkeypatch them.
+
+# Broadcast the selected batch into the fetch/leftover joins only up to
+# this size; beyond it the driver collect+rebroadcast is a measured
+# ~1.5s/generation of serial time (and at 10^8-row production batches
+# would be GBs) — use a shuffle join instead.  (On a real deployment the
+# frontier/pages tables are bucketed by key — Iceberg storage-partitioned
+# joins — so the shuffle is one-sided or free; plans/layout.py carries
+# that design.)  The same size gates AQE for the whole run (run_crawl).
+BROADCAST_BATCH_MAX_ROWS = 200_000
+# Skip the salted pre-top-k (schedule phase 0) while the frontier is
+# below this many rows: the skew it guards against needs ONE host with
+# enough rows to overwhelm a single reducer's sort (~10^7), and under a
+# Zipf host law the hottest host carries a few percent of the frontier —
+# so below ~2x10^7 frontier rows the extra window shuffle is pure fixed
+# cost per generation.  Size comes free from the observe() metric on the
+# frontier's checkpoint materialization (and, on resume, the manifest).
+SALT_PHASE_MIN_ROWS = 20_000_000
+# Global top-k by TakeOrderedAndProject (k-per-partition heaps + driver
+# merge) up to this batch size, the distributed quota pop above it:
+# profiling at 400k-row frontiers showed TakeOrdered beats the quota pop
+# (which pays a full extra materialization) until k reaches several
+# hundred thousand.  The quota pop runs jobs at plan time, so plan
+# overlap (run_crawl) is off above this size.
+TAKE_ORDERED_MAX_ROWS = 150_000
+# Compact the seen-set delta chain once it reaches this many parts, so
+# per-part scan/task overhead stays bounded: one O(total) pass amortized
+# over this many generations.  The value is a design bound, not a
+# measured optimum; tests/test_crawl_simulator.py pins compaction's
+# results with a lowered value.
+SEEN_COMPACT_PARTS = 32
 
 
 def _union_all(parts: list[DataFrame]) -> DataFrame:
@@ -110,63 +144,6 @@ class CrawlConfig:
     # at 10^7 seen keys and the filter-from-key-1 loop A/B (BENCH.md,
     # "One URL-seen sidecar") leave that crossover where it was.
     bloom_min_keys: int = 4_000_000
-    # broadcast the selected batch into the fetch/leftover joins only up
-    # to this size; beyond it the driver collect+rebroadcast is a
-    # measured ~1.5s/generation of serial time (and at 10^8-row
-    # production batches would be GBs) — use a shuffle join instead.
-    # (On a real deployment the frontier/pages tables are bucketed by
-    # key — Iceberg storage-partitioned joins — so the shuffle is
-    # one-sided or free; plans/layout.py carries that design.)
-    broadcast_batch_max_rows: int = 200_000
-    # skip the salted pre-top-k (schedule phase 0) while the frontier is
-    # below this many rows: the skew it guards against needs ONE host
-    # with enough rows to overwhelm a single reducer's sort (~10^7), and
-    # under a Zipf host law the hottest host carries a few percent of
-    # the frontier — so below ~2x10^7 frontier rows the extra window
-    # shuffle is pure fixed cost per generation.  Size comes free from
-    # the observe() metric on the frontier's checkpoint materialization.
-    salt_phase_min_rows: int = 20_000_000
-    # below this frontier size a generation runs FUSED: one heavy job
-    # (the next-frontier checkpoint, which materializes fetch+parse+
-    # discover in-line via lazy localCheckpoints) instead of 4-5, seen
-    # delta derived from the frontier snapshot.
-    # Above it (the 10^10 production regime, where job-launch latency is
-    # <1% of a generation) every stage keeps its own eager checkpoint and
-    # the seen delta is a compact per-generation frame instead of a
-    # filter over retained full-frontier snapshots.
-    fuse_below_rows: int = 2_000_000
-    # compact the seen-set delta chain once it reaches this many parts
-    seen_compact_parts: int = 32
-    # run fused BROADCAST-PATH generations (batch <=
-    # broadcast_batch_max_rows, so the fetch join has no shuffle) with
-    # AQE disabled — session value restored for other generations and at
-    # loop exit.  AQE re-plans each lazy localCheckpoint's toRdd one
-    # materialized stage at a time, a driver-serial cost with nothing to
-    # buy on a shuffle-free generation: interleaved A/B measured AQE-off
-    # at 1.69x median on the 3-generation broadcast-path loop, but
-    # 0.95x on the shuffle-join 400k-batch generation — so shuffle-join
-    # and production-scale (unfused) generations keep AQE (skew-join
-    # splitting, shuffle coalescing).  Evidence in BENCH.md.
-    aqe_off_fused: bool = True
-    # build generation g+1's plan on a SECOND driver thread while
-    # generation g's heavy job runs (the _AsyncSave pattern applied to
-    # the ~1-2s/generation driver-serial plan term — BENCH.md phase
-    # table).  Speculative: the pre-built plan embeds this generation's
-    # gate decisions (fused/salt/top-k-skip) and the absence of a seen
-    # filter; run_crawl validates both against post-job reality and
-    # rebuilds from scratch on any mismatch, so results are bit-identical
-    # by construction (pinned by tests/test_frontier.py overlap parity).
-    # Only engaged on fused broadcast-path generations with a plan-only
-    # schedule (global_batch <= 150k) and no live seen filter (its
-    # per-generation insert replaces the filter object, which would
-    # always invalidate).
-    # Default ON since r5: with growth-aware frontier-size speculation
-    # both eligible headline generations engage; interleaved A/Bs at the
-    # 3-generation headline shape measured median +5.5% (3 pairs) and
-    # +4.7% (5 pairs; clean pairs +4..13%) — the win is the removal of a
-    # core-count-INDEPENDENT driver term, so it grows with cluster size.
-    overlap_plan: bool = True
-    collect_metrics: bool = True
 
 
 def _with_keys(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -254,13 +231,13 @@ def schedule(frontier: DataFrame, cfg: CrawlConfig,
     bound so the hottest Zipf host can't overload one reducer.  Skipped
     (result-identical: phase 1 is exact, and every per-host top-budget
     row is inside its salt bucket's top-budget) while the frontier is
-    known to be below cfg.salt_phase_min_rows — one fewer window shuffle
+    known to be below SALT_PHASE_MIN_ROWS — one fewer window shuffle
     per generation.
     Phase 1: exact row_number per host ≤ budget.
     Phase 2: global top ``global_batch`` by (priority, urlkey) via a
     range-partitioned sort (no single-node sort)."""
     pre = frontier
-    if frontier_size is None or frontier_size >= cfg.salt_phase_min_rows:
+    if frontier_size is None or frontier_size >= SALT_PHASE_MIN_ROWS:
         salted = frontier.withColumn(
             "salt", F.pmod(F.xxhash64("urlkey"), F.lit(N_SALT)))
         w0 = (Window.partitionBy("host", "salt")
@@ -284,11 +261,7 @@ def schedule(frontier: DataFrame, cfg: CrawlConfig,
         # materialization, zero-scaling at sandbox size) is a no-op —
         # skip it.  Typical of the ramp-up generations of a crawl.
         return polite
-    if cfg.global_batch <= 150_000:
-        # TakeOrderedAndProject: k-per-partition heaps + driver merge.
-        # Profiling at 400k-row frontiers showed this beats the exact
-        # distributed quota pop (which pays a full extra materialization)
-        # until k reaches several hundred thousand.
+    if cfg.global_batch <= TAKE_ORDERED_MAX_ROWS:
         return (polite.orderBy(F.desc("priority"), "urlkey")
                 .limit(cfg.global_batch))
     return distributed_top_k(polite, [F.desc("priority"), F.col("urlkey")],
@@ -449,47 +422,43 @@ def robots_gate(candidates: DataFrame, robots: DataFrame | None = None,
 def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
                robots: DataFrame | None, cfg: CrawlConfig, gen: int,
                bloom=None, frontier_size: int | None = None,
-               fused: bool = False,
                host_budgets: DataFrame | None = None,
                robots_rules: DataFrame | None = None):
-    """One generation.  Returns (next_frontier, new_seen_keys, cdx, metrics).
+    """One generation's plan.  Returns (next_frontier, cdx, metrics).
 
     ``pages`` simulates the web: fetch = equi join on url.  ``bloom`` is an
     optional seen.ShardedCuckoo covering all of ``seen`` (run_crawl
     maintains it incrementally); without it the exact anti-join runs
     alone.
 
-    Metric counts ride as ``observe()`` metrics on frames this step
-    already materializes eagerly — zero extra jobs per generation (the
-    count() jobs they replace were the loop's Amdahl serial term at
-    small batch sizes).
+    The generation runs as ONE heavy job — the next-frontier checkpoint
+    in run_crawl — plus a trivial count of the persisted parse blocks.
+    Every compute-once frame (selection, parsed, filter-flagged
+    candidates) is a LAZY localCheckpoint: the first job that touches it
+    materializes+persists it in-line and later consumers (including a
+    second union branch of the SAME job) read the persisted blocks,
+    verified compute-once on Spark 4.1.2.  Rationale: each eager job
+    barrier measured ~1.5-2s of core-count-independent stage-launch +
+    planning time at 16c (the 4-5-job round-2 layout cost ~12s/generation
+    — the Amdahl term behind the loop's 0.26 round-2 scaling; fusing the
+    parse barrier was another interleaved +10% at 16c).  The eager
+    per-stage layout once kept for production-size frontiers measured
+    0.92x of this one at the 400k-batch shuffle-join shape (7 interleaved
+    pairs, identical CDX) and was deleted; BENCH.md "One crawl generation
+    layout" holds that A/B and its re-run.
 
-    ``fused`` (run_crawl turns it on while the frontier is below
-    cfg.fuse_below_rows): the generation runs as ONE heavy job — the
-    next-frontier checkpoint in run_crawl — plus a trivial count of the
-    persisted parse blocks.  Every compute-once frame (selection,
-    parsed, filter-flagged candidates) uses a LAZY localCheckpoint: the
-    first job that touches it materializes+persists it in-line and
-    later consumers (including a second union branch of the SAME job)
-    read the persisted blocks, verified compute-once on Spark 4.1.2.
-    The seen delta has no job of its own either: run_crawl derives it
-    from the checkpointed next frontier (generation == gen+1) as a lazy
-    checkpoint materialized by its first consumer.  Rationale: each
-    eager job barrier measured ~1.5-2s of core-count-independent
-    stage-launch + planning time at 16c (the 4-5-job round-2 layout
-    cost ~12s/generation — the Amdahl term behind the loop's 0.26
-    round-2 scaling; fusing the parse barrier was another interleaved
-    +10% at 16c).  Observations stay on eager checkpoints only: an
+    Nothing here materializes, so nothing can be counted here: an
     observe() under a lazy checkpoint records nothing (verified — the
-    metric fires empty), which is why the scheduled count is a
-    post-materialization count() instead.
+    metric fires empty).  run_crawl fills ``scheduled``/``cdx_rows``
+    (a count of the persisted parse blocks, ``metrics["_parsed"]``) and
+    ``novel`` (an observation on its frontier job) after the job, and
+    derives the seen delta from the checkpointed next frontier.
 
     ``metrics["step_phases"]`` holds the driver wall clock of each
-    plan-building sub-phase (the selection and parse checkpoints are
-    eager jobs outside fused mode).
+    plan-building sub-phase; the big-batch fetch bloom is the only job
+    one can contain (besides a distributed top-k above
+    TAKE_ORDERED_MAX_ROWS).
     """
-    from pyspark.sql import Observation
-
     _timers: dict[str, float] = {}   # sub-phase driver wall clocks
 
     def _mark(tag: str, t0: float) -> float:
@@ -498,10 +467,10 @@ def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
         return t
 
     _t = time.perf_counter()
-    # materialize the (small, batch-bounded) selection once — it feeds the
-    # fetch join, the leftover anti-join and the metrics, and its lineage
-    # contains window shuffles that must not re-execute per consumer.
-    # Fused: lazily — the fetch join's broadcast build materializes it.
+    # the (small, batch-bounded) selection is computed once — it feeds the
+    # fetch join and the leftover anti-join, and its lineage contains
+    # window shuffles that must not re-execute per consumer; the fetch
+    # join's broadcast build materializes it.
     # (A round-4 experiment replaced this + the leftover anti-join with a
     # single flagged "staged" checkpoint, fusing gen-0 seed dedup into the
     # politeness window's host partitioning — interleaved same-window A/B
@@ -522,7 +491,7 @@ def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
     selected = (schedule(frontier, cfg, frontier_size,
                          host_budgets=host_budgets, scratch=scratch)
                 .withColumn("generation", F.lit(gen))
-                .localCheckpoint(eager=not fused))
+                .localCheckpoint(eager=False))
     scratch.append(selected)
     _t = _mark("selected_ckpt", _t)
 
@@ -541,7 +510,7 @@ def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
     # on their keys so the join is storage-partitioned; see
     # plans/layout.py.)
     web = pages.select("url", "warc_ts", "html")
-    small_batch = cfg.global_batch <= cfg.broadcast_batch_max_rows
+    small_batch = cfg.global_batch <= BROADCAST_BATCH_MAX_ROWS
     if small_batch:
         fetched = web.join(F.broadcast(selected), "url", "inner")
     else:
@@ -554,13 +523,7 @@ def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
     _t = _mark("fetch_bloom", _t)
     # parse once, checkpoint a SLIM projection (digest + outlinks, never the
     # raw html) — both the CDX emission and the discovery stage read it, so
-    # the web table is scanned exactly once per generation.  Fused: LAZY,
-    # so fetch+parse+discover+anti-join+union all materialize inside the
-    # single next-frontier job (one barrier fewer — each eager job was
-    # measured carrying ~1.5-2s of core-count-independent stage-launch +
-    # plan time at 16c); the scheduled count then can't ride an observe()
-    # (fires empty under a lazy checkpoint) — run_crawl counts the
-    # persisted parsed blocks afterwards (~0.1s job).
+    # the web table is scanned exactly once per generation.
     # the page payload NEVER crosses the JVM->Python boundary: the digest
     # is JVM expression arithmetic (sha1 + base32 bit algebra) and href
     # extraction is regexp_extract_all inside codegen; Python receives
@@ -568,17 +531,9 @@ def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
     # html through Arrow (the previous layout) was the loop's largest
     # DRAM mover — the binding resource on the bandwidth-capped 16-core
     # side (BENCH.md), and at 100 TB/generation scale pure waste.
-    parsed_plan = fetched.select(
-        "urlkey", "url", "warc_ts", "generation", "priority", *_parse_cols())
-    _t = _mark("parsed_plan_build", _t)
-    if fused:
-        obs_parsed = None
-        parsed = parsed_plan.localCheckpoint(eager=False)
-    else:
-        obs_parsed = Observation()
-        parsed = (parsed_plan
-                  .observe(obs_parsed, F.count(F.lit(1)).alias("n"))
-                  .localCheckpoint(eager=True))
+    parsed = (fetched.select("urlkey", "url", "warc_ts", "generation",
+                             "priority", *_parse_cols())
+              .localCheckpoint(eager=False))
     _t = _mark("parsed_ckpt", _t)
     cdx = page_cdx(parsed)
 
@@ -603,35 +558,19 @@ def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
     # probe volume; the exact join stays the source of truth)
     from .seen import anti_join_seen
     novel = anti_join_seen(cand, seen, "urlkey", bloom=bloom,
-                           materialize="lazy" if fused else True,
                            scratch=scratch)
     _t = _mark("anti_join_seen", _t)
 
+    # no checkpoint: new_entries materializes once, inside the
+    # next-frontier checkpoint job; run_crawl derives the seen delta by
+    # filtering the checkpointed frontier on generation
     new_entries = novel.select(
         "urlkey", "url", "host",
         F.round(F.col("parent_priority") * cfg.priority_decay, 6).alias("priority"),
         F.lit(gen + 1).alias("generation"))
-    if fused:
-        # no checkpoint and no observation: new_entries materializes once,
-        # inside the next-frontier checkpoint job; run_crawl reads the
-        # novel count off that job's observation and derives the seen
-        # delta by filtering the checkpointed frontier on generation
-        obs_novel = None
-        new_seen_keys = None
-    else:
-        obs_novel = Observation()
-        new_entries = (new_entries
-                       .observe(obs_novel, F.count(F.lit(1)).alias("n"))
-                       .localCheckpoint(eager=True))
-        # only the novel discoveries are new to the seen set: selected
-        # URLs entered it the moment they were enqueued (distinct by
-        # construction, so the union below needs no dedup shuffle)
-        new_seen_keys = new_entries.select("urlkey")
-
     # selected is bounded by global_batch — broadcast when small so the
     # (much larger) frontier never shuffles for this anti-join; same
     # size gate as the fetch join above
-    _t = _mark("new_entries_ckpt", _t)
     sel_keys = selected.select("urlkey")
     leftover = frontier.join(
         F.broadcast(sel_keys) if small_batch else sel_keys,
@@ -639,16 +578,9 @@ def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
     next_frontier = leftover.unionByName(new_entries)
     _t = _mark("leftover_union_build", _t)
 
-    # non-fused: parsed's eager localCheckpoint already ran its job; this
-    # get returns the recorded metric without launching anything.  Fused:
-    # parsed hasn't materialized yet — run_crawl fills the count in after
-    # the frontier job (which materializes it in-line) completes.
-    n_fetched = None if fused else int(obs_parsed.get["n"])
     metrics = {
         "generation": gen,
-        "scheduled": n_fetched,    # == fetched == cdx rows by design
-        "cdx_rows": n_fetched,
-        "_parsed": parsed if fused else None,
+        "_parsed": parsed,
         # checkpointed frames with no consumer after the next frontier
         # materializes — run_crawl frees their blocks with
         # util.free_checkpoint (plain unpersist() is a no-op on
@@ -658,12 +590,7 @@ def crawl_step(pages: DataFrame, frontier: DataFrame, seen: DataFrame,
         "_scratch": scratch,
         "step_phases": _timers,
     }
-    if not fused:
-        metrics["novel"] = int(obs_novel.get["n"])
-        # the persisted frame behind new_seen (a projection of it): the
-        # handle the seen-delta lifecycle must free at compaction
-        metrics["_delta_handle"] = new_entries
-    return next_frontier, new_seen_keys, cdx, metrics
+    return next_frontier, cdx, metrics
 
 
 # ------------------------------------------------------------ checkpoint --
@@ -739,15 +666,13 @@ class _AsyncPlan:
 
 
 def _gate_decisions(cfg: CrawlConfig, frontier_size: int | None) -> tuple:
-    """The three result-identical-optimization gates a crawl_step plan
-    bakes in from frontier_size (plus the AQE toggle key, which follows
-    fused).  Two sizes with equal decisions produce interchangeable
-    plans — the overlap-mode validation predicate."""
-    fused = frontier_size is not None and frontier_size < cfg.fuse_below_rows
-    salt_on = frontier_size is None or frontier_size >= cfg.salt_phase_min_rows
+    """The two result-identical-optimization gates a crawl_step plan
+    bakes in from frontier_size.  Two sizes with equal decisions produce
+    interchangeable plans — the overlap-mode validation predicate."""
+    salt_on = frontier_size is None or frontier_size >= SALT_PHASE_MIN_ROWS
     topk_skip = (frontier_size is not None
                  and frontier_size <= cfg.global_batch)
-    return (fused, salt_on, topk_skip)
+    return (salt_on, topk_skip)
 
 
 def _part_files(path: str) -> list[dict]:
@@ -995,7 +920,10 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
     """Run ``generations`` crawl steps; returns (frontier, seen, all_cdx,
     metrics list).  With ``resume``, continues from the last complete
     checkpoint and never re-emits a CDX row (idempotence via anti-join on
-    already-emitted urlkeys per generation).
+    already-emitted urlkeys per generation).  Every generation, fresh or
+    resumed, runs crawl_step's one-heavy-job layout; a resumed one reads
+    its frontier size off the last manifest, so it takes the same size
+    gates a fresh generation would.
 
     ``expire_keys`` (resume path): recrawl scheduling — a (urlkey) frame
     of URLs whose revisit interval expired.  They leave the seen set and
@@ -1018,20 +946,28 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
       keys; it is rebuilt over the full set only when the count outgrows
       that headroom or a shard overflows (_seen_filter);
     * the seen-set cardinality that gates/sizes the filter is a running
-      total from per-generation novel counts — no seen.count() jobs;
-    * per-generation metric counts are observe() metrics on frames the
-      step materializes anyway — no dedicated count() jobs."""
+      total from per-generation novel counts — no seen.count() jobs
+      (one at resume);
+    * per-generation metric counts are observe() metrics on the frontier
+      job plus one count of the persisted parse blocks — nothing
+      recomputes."""
     from .seen import ShardedCuckoo, is_cuckoo_overflow, sharded_cuckoo_insert
 
     start_gen = 0
     all_metrics: list[dict] = []
     emitted_keys = None
     seen_parts: list[DataFrame]
+    frontier_size: int | None = None
     if resume and checkpoint_dir:
         state = load_state(spark, checkpoint_dir)
         if state is not None:
-            last_gen, frontier, seen, _m = state
+            last_gen, frontier, seen, last_manifest = state
             start_gen = last_gen + 1
+            # the manifest records the resumed frontier's size, so a
+            # resumed generation takes the same salt / top-k gates as a
+            # fresh one; None (older manifests) keeps the salt phase,
+            # which is exact either way
+            frontier_size = last_manifest.get("frontier_size")
             # reassemble the emitted-CDX guard with the same persisted-
             # tombstone subtraction load_state applies to the seen set:
             # a tombstone at asof_gen s cancels emissions from gens < s
@@ -1054,31 +990,26 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                 seen = seen.join(exp, "urlkey", "left_anti")
                 emitted_keys = emitted_keys.join(exp, "urlkey",
                                                  "left_anti")
-        else:
-            resume = False
     from pyspark.sql import Observation
 
-    frontier_size: int | None = None   # None = unknown (resume) -> keep salt
-    init_handle = None   # gen-0 frontier checkpoint: seen_parts[0] reads its
-    #                      blocks, so it is freed only at delta compaction
+    init_handle = None   # gen-0 seed-keys delta (lazy checkpoint of the
+    #                      init frontier), tracked in seen_handles
     if start_gen == 0:
         obs0 = Observation()
         frontier = (init_frontier(seeds)
                     .observe(obs0, F.count(F.lit(1)).alias("n"))
                     .localCheckpoint(eager=True))
         frontier_size = int(obs0.get["n"])
-        # compact lazy delta (see the fused seen-delta note below): the
-        # seed keys materialize on first use, and the init frontier
-        # snapshot is freed after generation 0 instead of being pinned
-        # by this seen part until compaction
+        # compact lazy delta (see the seen-delta note below): the seed
+        # keys materialize on first use, and the init frontier snapshot
+        # is freed after generation 0 instead of being pinned by this
+        # seen part until compaction
         seen = frontier.select("urlkey").localCheckpoint(eager=False)
         init_handle = seen
     seen_parts = [seen]
-    # persisted frames backing seen_parts (None for resume's parquet read).
-    # In fused generations the handle IS the generation's full frontier
-    # snapshot (the seen delta is a filter over it), so a handle may back
-    # both the live frontier and a seen part — the freeing rules below
-    # check identity against this list before releasing any blocks.
+    # the persisted frames backing seen_parts (None for resume's parquet
+    # read): each generation's lazy delta checkpoint, or the compacted
+    # base — what compaction frees
     seen_handles: list = [init_handle]
 
     # fresh start: |seen| == |frontier| == the seed count we already
@@ -1095,38 +1026,28 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
     # build re-run only the tiny agg job
     robots_rules_plan = (robots_rules_table(robots)
                          if robots is not None else None)
+    # AQE re-plans every lazy localCheckpoint's toRdd one materialized
+    # stage at a time — on a SHUFFLE-FREE (broadcast-fetch) generation
+    # that driver-serial planning buys nothing: interleaved A/B measured
+    # AQE-off at 1.25-1.94x (median 1.69x) on the 3-generation
+    # broadcast-path loop, identical output, but 0.95x on the
+    # shuffle-join 400k-batch generation (BENCH.md).  A resumed run
+    # keeps AQE: it plans over parquet-read state (frontier, seen
+    # deltas, the emitted-keys guard), and an interleaved A/B in one
+    # JVM measured its generation 0.885x as long with AQE on (10 pairs,
+    # 9 faster; BENCH.md "One crawl generation layout").  Both inputs
+    # are fixed for the run, so this is one decision per run: set
+    # before the first generation (no checkpoint write is in flight
+    # yet, and every background write then plans under the same
+    # setting) and restored at exit.
     aqe_key = "spark.sql.adaptive.enabled"
     aqe_orig = spark.conf.get(aqe_key, "true")
+    if emitted_keys is None and cfg.global_batch <= BROADCAST_BATCH_MAX_ROWS:
+        spark.conf.set(aqe_key, "false")
     pending: dict | None = None   # overlap-thread pre-built next plan
     prev_in_size: int | None = None   # last generation's INPUT frontier size
     try:
         for gen in range(start_gen, generations):
-            # fused small-generation mode: see crawl_step.  Off when the
-            # frontier size is unknown (resume) or at production scale.
-            fused = (frontier_size is not None
-                     and frontier_size < cfg.fuse_below_rows)
-            if cfg.aqe_off_fused:
-                # AQE re-plans every lazy localCheckpoint's toRdd one
-                # materialized stage at a time — on a SHUFFLE-FREE
-                # (broadcast-fetch) fused generation that driver-serial
-                # planning buys nothing: interleaved A/B measured
-                # AQE-off at 1.25-1.94x (median 1.69x) on the
-                # 3-generation broadcast-path loop, identical output,
-                # but 0.95x on the shuffle-join 400k-batch generation —
-                # so the toggle keys on the fetch path.  Restored for
-                # every other generation and at loop exit (BENCH.md).
-                # The conf is SESSION-wide and the async checkpoint
-                # writer plans jobs from a background thread, so the
-                # value is only ever flipped after joining any in-flight
-                # write — in a homogeneous run it is set once at gen 0
-                # (no writer is outstanding yet) and every overlapped
-                # save then plans under the same, intended setting.
-                aqe_off = (fused and cfg.global_batch
-                           <= cfg.broadcast_batch_max_rows)
-                want = "false" if aqe_off else aqe_orig
-                if spark.conf.get(aqe_key) != want:
-                    saver.join()
-                    spark.conf.set(aqe_key, want)
             if filt is None and seen_count >= cfg.bloom_min_keys:
                 # the filter engages: build over the full set with
                 # headroom so later generations only insert their deltas
@@ -1139,24 +1060,22 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
             # a plan pre-built on the overlap thread last generation is
             # used ONLY if every assumption it baked in still holds:
             # same gate decisions under the ACTUAL frontier size, still no
-            # seen filter (it was built without one), no compaction, no
-            # resume guard.  Otherwise it is discarded and the plan is
-            # rebuilt fresh — results identical either way.
-            used_prebuilt = False
-            if (pending is not None and pending["gen"] == gen and fused
-                    and emitted_keys is None and filt is None
+            # seen filter (it was built without one), no compaction.
+            # Otherwise it is discarded and the plan is rebuilt fresh —
+            # results identical either way.
+            if (pending is not None and pending["gen"] == gen
+                    and filt is None
                     and pending["n_seen_parts"] == len(seen_parts)
                     and pending["decisions"]
                     == _gate_decisions(cfg, frontier_size)):
-                frontier, new_seen, cdx, metrics = pending["result"]
+                frontier, cdx, metrics = pending["result"]
                 metrics["plan_overlapped"] = True
-                used_prebuilt = True
             else:
                 # a discarded speculative plan was never materialized —
                 # its lazy checkpoint marks hold no blocks; just drop it
-                frontier, new_seen, cdx, metrics = crawl_step(
+                frontier, cdx, metrics = crawl_step(
                     pages, frontier, seen, robots, cfg, gen, bloom=filt,
-                    frontier_size=frontier_size, fused=fused,
+                    frontier_size=frontier_size,
                     host_budgets=host_budgets,
                     robots_rules=robots_rules_plan)
                 if pending is not None:
@@ -1164,40 +1083,50 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
             pending = None
             _t1 = time.perf_counter()   # plan construction (+ fetch-bloom job)
             scratch = metrics.pop("_scratch", [])
-            delta_handle = metrics.pop("_delta_handle", None)
+            parsed_handle = metrics.pop("_parsed")
             if emitted_keys is not None:
                 cdx = cdx.join(emitted_keys.select("urlkey").distinct(),
                                "urlkey", "left_anti")
             # frontier feeds two consumers next generation (schedule + leftover
             # anti-join) through window shuffles — materialize it once; its
-            # row count (and, fused, the novel-discovery count) ride along as
-            # free observe() metrics.  In fused mode this is the generation's
-            # ONLY heavy job: selection, fetch, parse, discovery, filter
-            # check, exact anti-join and union all materialize inside it.
+            # row count and the novel-discovery count ride along as free
+            # observe() metrics.  This is the generation's ONLY heavy job:
+            # selection, fetch, parse, discovery, filter check, exact
+            # anti-join and union all materialize inside it.
             #
-            # overlap_plan: while that job runs in THIS thread, a second
+            # Plan overlap: while that job runs in THIS thread, a second
             # driver thread pre-builds generation gen+1's plan against the
             # lazy checkpoint handle (plan construction is pure driver
-            # py4j/Catalyst work; Spark supports concurrent submission).
+            # py4j/Catalyst work; Spark supports concurrent submission) —
+            # the _AsyncSave pattern applied to the ~1-2s/generation
+            # driver-serial plan term (BENCH.md phase table).  Interleaved
+            # A/Bs at the 3-generation headline shape measured median
+            # +5.5% (3 pairs) and +4.7% (5 pairs; clean pairs +4..13%),
+            # a core-count-INDEPENDENT term, so the win grows with cluster
+            # size.  Eligible only while the plan runs no job (broadcast
+            # fetch, TakeOrdered top-k), no compaction is due, there is no
+            # resume guard, and no seen filter is live (its per-generation
+            # insert replaces the filter object, which would always
+            # invalidate the plan).
             # An observe() records nothing under a lazy checkpoint
             # (verified, BENCH.md), so this path takes the counts as two
             # jobs instead: the materializing count() IS the heavy job,
             # and the novel count re-reads the persisted blocks (~0.1s).
             do_overlap = (
-                cfg.overlap_plan and fused and gen + 1 < generations
+                gen + 1 < generations
                 and emitted_keys is None
-                and cfg.global_batch <= 150_000
-                and cfg.global_batch <= cfg.broadcast_batch_max_rows
-                and len(seen_parts) + 1 < cfg.seen_compact_parts
+                and cfg.global_batch <= TAKE_ORDERED_MAX_ROWS
+                and cfg.global_batch <= BROADCAST_BATCH_MAX_ROWS
+                and len(seen_parts) + 1 < SEEN_COMPACT_PARTS
                 and filt is None)
-            spec_delta_cur = None
+            new_seen = None
             if do_overlap:
                 frontier = frontier.localCheckpoint(eager=False)
-                spec_delta_cur = (frontier
-                                  .where(F.col("generation") == gen + 1)
-                                  .select("urlkey")
-                                  .localCheckpoint(eager=False))
-                spec_seen = _union_all(seen_parts + [spec_delta_cur])
+                new_seen = (frontier
+                            .where(F.col("generation") == gen + 1)
+                            .select("urlkey")
+                            .localCheckpoint(eager=False))
+                spec_seen = _union_all(seen_parts + [new_seen])
                 # speculated next-generation frontier size; validated at
                 # use.  The running job's output size is unknowable here,
                 # but frontier growth in the discovery phase is
@@ -1222,8 +1151,7 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                            fs=spec_fs):
                     return crawl_step(
                         pages, ckpt, sseen, robots, cfg, g,
-                        frontier_size=fs, fused=True,
-                        host_budgets=host_budgets,
+                        frontier_size=fs, host_budgets=host_budgets,
                         robots_rules=robots_rules_plan)
 
                 plan_thread = _AsyncPlan(_build)
@@ -1253,31 +1181,14 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
             prev_in_size = frontier_size
             frontier_size = int(vals["n"])
             metrics["frontier_size"] = frontier_size
-            parsed_handle = metrics.pop("_parsed", None)
-            if fused:
-                metrics["novel"] = int(vals["novel"] or 0)
-                # the frontier job just materialized the lazy parsed
-                # checkpoint in-line; counting its persisted blocks is a
-                # trivial job (no recompute) and replaces the observe() the
-                # eager parse barrier used to carry
-                n_fetched = parsed_handle.count()
-                metrics["scheduled"] = n_fetched
-                metrics["cdx_rows"] = n_fetched
-                # the seen delta: this generation's novel entries, read off the
-                # frontier snapshot (they are exactly the generation==gen+1
-                # rows), as a LAZY checkpoint — its first consumer (the next
-                # generation's anti-join, or this generation's checkpoint
-                # write / filter insert) materializes the compact key list
-                # in-line, after which the seen chain reads these small
-                # blocks instead of re-filtering every retained full-frontier
-                # snapshot per generation (measured ~2x on the 3-generation
-                # loop), and the superseded frontier snapshot is freed on
-                # schedule instead of being pinned by its seen part
-                new_seen = (spec_delta_cur if spec_delta_cur is not None
-                            else frontier
-                            .where(F.col("generation") == gen + 1)
-                            .select("urlkey").localCheckpoint(eager=False))
-                delta_handle = new_seen
+            metrics["novel"] = int(vals["novel"] or 0)
+            # the frontier job just materialized the lazy parsed checkpoint
+            # in-line; counting its persisted blocks is a trivial job (no
+            # recompute) — an observe() under the lazy checkpoint would
+            # record nothing
+            n_fetched = parsed_handle.count()
+            metrics["scheduled"] = n_fetched    # == fetched by design
+            metrics["cdx_rows"] = n_fetched
             if emitted_keys is not None:
                 # resumed runs: the manifest's cdx_rows must count the
                 # rows the checkpoint actually writes — AFTER the
@@ -1286,14 +1197,27 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                 # already-emitted URLs).  parsed is persisted by now, so
                 # this is a projection + anti-join over it, resume-only.
                 metrics["cdx_rows"] = cdx.count()
+            if new_seen is None:
+                # the seen delta: this generation's novel entries, read off
+                # the frontier snapshot (they are exactly the
+                # generation==gen+1 rows), as a LAZY checkpoint — its first
+                # consumer (the next generation's anti-join, or this
+                # generation's checkpoint write / filter insert)
+                # materializes the compact key list in-line, after which
+                # the seen chain reads these small blocks instead of
+                # re-filtering every retained full-frontier snapshot per
+                # generation (measured ~2x on the 3-generation loop), and
+                # the superseded frontier snapshot is freed on schedule
+                new_seen = (frontier.where(F.col("generation") == gen + 1)
+                            .select("urlkey").localCheckpoint(eager=False))
             seen_parts.append(new_seen)
-            seen_handles.append(delta_handle)
+            seen_handles.append(new_seen)
             compact_old: list | None = None
-            if len(seen_parts) >= cfg.seen_compact_parts:
+            if len(seen_parts) >= SEEN_COMPACT_PARTS:
                 # long crawls: compact the delta chain so per-part scan/task
                 # overhead stays bounded — one O(total) pass amortized over
-                # seen_compact_parts generations; the superseded backing frames
-                # are freed at the END of this generation
+                # SEEN_COMPACT_PARTS generations; the superseded backing
+                # frames are freed at the END of this generation
                 base = _union_all(seen_parts).localCheckpoint(eager=True)
                 compact_old = [h for h in seen_handles if h is not None]
                 seen_parts, seen_handles = [base], [base]
@@ -1331,7 +1255,7 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                     filt = _seen_filter(seen, filt_cap)
                 free_checkpoint(old_filt.df)
             # phase walls (driver clock): plan = crawl_step call (plus the
-            # fetch-bloom job for big batches), job = the fused heavy job,
+            # fetch-bloom job for big batches), job = the heavy job,
             # post = parsed count + seen/filter maintenance up to here
             metrics["wall_phases"] = {
                 "plan": round(_t1 - _t0, 3), "job": round(_t2 - _t1, 3),
@@ -1350,40 +1274,39 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                 saver.start(checkpoint_dir, gen, frontier, delta, cdx, metrics)
             # ---- free superseded checkpoint blocks (last: everything that
             # still reads them — frontier ckpt, filter insert, save_state —
-            # has materialized).  A frontier snapshot that backs a live seen
-            # part (fused generations, and gen 0's seed keys) stays until
-            # the compaction that absorbs it.
+            # has materialized).
             for df in scratch:
                 free_checkpoint(df)
-            if (prev_frontier_handle is not frontier
-                    and not any(h is prev_frontier_handle
-                                for h in seen_handles)):
-                # the seen delta derived from this snapshot is a LAZY
-                # checkpoint; normally some job this generation already
-                # materialized it (the anti-join scans the seen union), but
-                # a path that skipped it — e.g. AQE collapsing an empty
-                # candidate leg — would otherwise leave live lineage into
-                # the blocks we are about to free
-                if any(h is prev_frontier_delta for h in seen_handles):
-                    if checkpoint_dir and gen == 0:
-                        # gen 0's in-flight background write unions this same
-                        # lazy seed-keys delta: a writer job planned against
-                        # the not-yet-materialized checkpoint can still be
-                        # computing from the init frontier's lineage when its
-                        # blocks are unpersisted, and lost localCheckpoint
-                        # blocks are unrecoverable (the crash would surface
-                        # at the next saver.join).  Wait for the write first;
-                        # only gen 0 pays the serialization.
-                        saver.join()
-                    ensure_checkpointed(prev_frontier_delta)
-                free_checkpoint(prev_frontier_handle)
+            # the seen delta derived from the previous frontier snapshot is
+            # a LAZY checkpoint; normally some job this generation already
+            # materialized it (the anti-join scans the seen union), but a
+            # path that skipped it — e.g. AQE collapsing an empty
+            # candidate leg — would otherwise leave live lineage into the
+            # blocks we are about to free
+            if any(h is prev_frontier_delta for h in seen_handles):
+                if checkpoint_dir and gen == 0:
+                    # gen 0's in-flight background write unions this same
+                    # lazy seed-keys delta: a writer job planned against
+                    # the not-yet-materialized checkpoint can still be
+                    # computing from the init frontier's lineage when its
+                    # blocks are unpersisted, and lost localCheckpoint
+                    # blocks are unrecoverable (the crash would surface
+                    # at the next saver.join).  Wait for the write first;
+                    # only gen 0 pays the serialization.
+                    saver.join()
+                ensure_checkpointed(prev_frontier_delta)
+            free_checkpoint(prev_frontier_handle)
             if compact_old is not None:
                 # the in-flight checkpoint write may still read this
                 # generation's delta, which compaction is about to free
                 saver.join()
                 for h in compact_old:
-                    if h is not frontier:
-                        free_checkpoint(h)
+                    free_checkpoint(h)
+        if filt is not None:
+            # nothing returned reads the filter table (its last consumer,
+            # the final generation's anti-join, is inside the
+            # materialized frontier)
+            free_checkpoint(filt.df)
     finally:
         # join the background writer on EVERY exit: a mid-loop failure
         # must not leak a still-running checkpoint write (an immediate
@@ -1396,8 +1319,7 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
         try:
             saver.join()
         finally:
-            if cfg.aqe_off_fused:
-                spark.conf.set(aqe_key, aqe_orig)
+            spark.conf.set(aqe_key, aqe_orig)
     all_cdx = cdx_parts[0] if cdx_parts else None
     for c in cdx_parts[1:]:
         all_cdx = all_cdx.unionByName(c)

@@ -107,7 +107,7 @@ def bloom_prefilter(candidates: DataFrame, key: str, bitmap: bytes,
 
 def anti_join_seen(candidates: DataFrame, seen: DataFrame, key: str = "urlkey",
                    bloom: ShardedCuckoo | None = None,
-                   materialize: bool | str = True,
+                   materialize: bool = True,
                    scratch: list | None = None) -> DataFrame:
     """candidates − seen.  With a :class:`ShardedCuckoo` sidecar, only the
     maybe-seen slice pays the join shuffle; the definite-novel slice is
@@ -118,12 +118,11 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame, key: str = "urlkey",
     upstream of the filter — typically the candidate pipeline with its
     canonicalization UDF and dedup shuffles — executes twice (measured
     7x slower on the crawl's discover stage).  The flagged rows are
-    candidate-batch-sized, so the checkpoint is cheap.  ``True`` =
-    eager checkpoint (its own job); ``"lazy"`` = non-eager checkpoint —
-    the first job that touches the frame materializes+persists it
-    in-line, later consumers (including the second union branch of the
-    SAME job) read the persisted blocks: compute-once without the extra
-    job barrier (the crawl loop's fused small-generation mode).
+    candidate-batch-sized, so the checkpoint is cheap.  It is a LAZY
+    checkpoint: the first job that touches the frame materializes+persists
+    it in-line, and later consumers (including the second union branch
+    of the SAME job) read the persisted blocks — compute-once without a
+    job barrier of its own.
 
     ``scratch``: optional list; the materialized flagged frame is
     appended so the caller can free it (util.free_checkpoint — plain
@@ -134,7 +133,7 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame, key: str = "urlkey",
         return candidates.join(seen.select(key), key, "left_anti")
     flagged = sharded_cuckoo_prefilter(candidates, key, bloom)
     if materialize:
-        flagged = flagged.localCheckpoint(eager=(materialize != "lazy"))
+        flagged = flagged.localCheckpoint(eager=False)
         if scratch is not None:
             scratch.append(flagged)
     novel = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")

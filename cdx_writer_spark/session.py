@@ -10,6 +10,8 @@ set on a real cluster:
   (cli.py) so Python workers can't OOM (SURVEY.md §4 item 5)
 * shuffle partitions scaled with cores (2x) so the same job scales from
   local[8] to local[32] without config edits (BASELINE.md scaling protocol)
+* driver heap ``SPARK_GRAFT_DRIVER_MEM``, else half the host's RAM
+  (at most 48g)
 """
 
 from __future__ import annotations
@@ -21,6 +23,16 @@ from pyspark.sql import SparkSession
 __all__ = ["get_spark", "DEFAULT_CPUS"]
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _default_heap() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the
+    host's RAM, at least 2g and at most 48g.  The JVM grows its heap
+    toward the cap instead of collecting; with a fixed 48g cap a test
+    run passed 11 GB of RSS within four test files and a 16 GB host
+    OOM-killed it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(2, min(48, ram // (2 << 30)))}g"
 
 
 def get_spark(app_name: str = "cdx-writer-spark", cores: int | None = None,
@@ -48,7 +60,8 @@ def get_spark(app_name: str = "cdx-writer-spark", cores: int | None = None,
         # 2.4x SLOWER than 4-core); snappy scans scaled at 0.83 efficiency.
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # no-op under local[N] (everything is PROCESS_LOCAL); on a real
         # multi-executor cluster the default 3s delay-scheduling wait

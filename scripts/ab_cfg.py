@@ -6,9 +6,7 @@ drift cancels pairwise (BENCH.md protocol).
 
 Usage:
   python scripts/ab_cfg.py CORES N_PAGES BATCH GENS PAIRS CFG_A CFG_B [SEEDS]
-e.g. the overlap-plan lever at the 3-generation headline shape:
-  python scripts/ab_cfg.py 32 200000 50000 3 3 '{}' '{"overlap_plan": true}'
-or the seen filter engaged from key 1 against the exact anti-join alone:
+e.g. the seen filter engaged from key 1 against the exact anti-join alone:
   python scripts/ab_cfg.py 4 100000 25000 3 5 '{}' '{"bloom_min_keys": 1}'
 """
 

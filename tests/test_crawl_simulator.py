@@ -15,6 +15,8 @@ import re
 from decimal import ROUND_HALF_UP, Decimal
 from urllib.parse import urljoin
 
+import pytest
+
 from cdx_writer_spark.frontier.crawl import CrawlConfig, run_crawl
 from cdx_writer_spark.sources.synth import (synth_pages, synth_robots,
                                             synth_seeds)
@@ -134,26 +136,101 @@ def simulate_crawl(pages_rows, seeds_rows, robots_rows, cfg: CrawlConfig,
     return cdx, seen, frontier
 
 
-def test_crawl_matches_reference_simulator(spark):
+@pytest.fixture(scope="module")
+def sim_world(spark):
     pages = synth_pages(spark, N_PAGES, partitions=8)
     seeds = synth_seeds(spark, 20, N_PAGES)
     robots = synth_robots(spark)
-    cfg = CrawlConfig(per_host_budget=2, global_batch=200, bloom_min_keys=1)
-    gens = 3
+    rows = (pages.select("url", "warc_ts", "html").collect(),
+            seeds.collect(), robots.collect())
+    return pages, seeds, robots, rows
 
-    f, seen, cdx, _m = run_crawl(spark, pages, seeds, robots, cfg, gens)
+
+def _check_against_simulator(world, cfg, gens, f, seen, cdx, metrics):
+    """The loop's CDX rows, seen set and final frontier must equal the
+    simulator's; so must its per-generation ``scheduled`` count (the
+    simulator's CDX rows of that generation) and its total ``novel``
+    count (every seen key that is not a deduplicated seed)."""
+    rows = world[3]
+    sim_cdx, sim_seen, sim_frontier = simulate_crawl(*rows, cfg, gens)
     got_cdx = sorted(tuple(r) for r in cdx.collect())
     got_seen = sorted(r["urlkey"] for r in seen.collect())
     got_frontier = sorted((r["urlkey"], r["url"], r["host"],
                            r["priority"], r["generation"])
                           for r in f.collect())
 
-    sim_cdx, sim_seen, sim_frontier = simulate_crawl(
-        pages.select("url", "warc_ts", "html").collect(),
-        seeds.collect(), robots.collect(), cfg, gens)
-
     assert got_cdx == sorted(sim_cdx), "CDX rows diverge from simulator"
     assert got_seen == sorted(sim_seen), "seen set diverges from simulator"
     assert got_frontier == sorted(
         (k, u, h, p, g) for k, (p, u, h, g) in sim_frontier.items()), \
         "frontier diverges from simulator"
+    assert [m["generation"] for m in metrics] == list(range(gens))
+    assert [m["scheduled"] for m in metrics] == \
+        [sum(1 for r in sim_cdx if r[10] == g) for g in range(gens)], \
+        "per-generation scheduled count diverges from simulator"
+    n_seeds = len({_keyhost(r["url"])[0] for r in rows[1]})
+    assert sum(m["novel"] for m in metrics) == len(sim_seen) - n_seeds, \
+        "novel counts do not add up to the simulator's seen growth"
+
+
+@pytest.mark.parametrize("bloom_min_keys,resume", [
+    (1, False), (CrawlConfig.bloom_min_keys, False),
+    (CrawlConfig.bloom_min_keys, True)],
+    ids=["cuckoo", "exact", "exact-resume"])
+def test_crawl_matches_reference_simulator(spark, sim_world, tmp_path,
+                                           bloom_min_keys, resume):
+    """``cuckoo`` runs the sharded seen filter from the first key; ``exact``
+    is the default path (exact anti-join, plan overlap); ``exact-resume``
+    checkpoints gens-1 generations and resumes the last one, which must
+    run the same layout and land on the same values."""
+    pages, seeds, robots, _rows = sim_world
+    cfg = CrawlConfig(per_host_budget=2, global_batch=200,
+                      bloom_min_keys=bloom_min_keys)
+    gens = 3
+
+    if resume:
+        ckpt = str(tmp_path / "ckpt")
+        _f, _s, cdx1, m1 = run_crawl(spark, pages, seeds, robots, cfg,
+                                     gens - 1, checkpoint_dir=ckpt)
+        f, seen, cdx2, m2 = run_crawl(spark, pages, seeds, robots, cfg,
+                                      gens, checkpoint_dir=ckpt,
+                                      resume=True)
+        assert [m["generation"] for m in m2] == [gens - 1]
+        cdx, metrics = cdx1.unionByName(cdx2), m1 + m2
+    else:
+        f, seen, cdx, metrics = run_crawl(spark, pages, seeds, robots, cfg,
+                                          gens)
+    _check_against_simulator(sim_world, cfg, gens, f, seen, cdx, metrics)
+    if bloom_min_keys > 1 and not resume:
+        assert any(m.get("plan_overlapped") for m in metrics), \
+            "vacuous: the default path never used a pre-built plan"
+
+
+@pytest.mark.parametrize("bloom_min_keys", [1, CrawlConfig.bloom_min_keys],
+                         ids=["cuckoo", "exact"])
+def test_seen_compaction_matches_reference_simulator(spark, sim_world,
+                                                     monkeypatch,
+                                                     bloom_min_keys):
+    """With SEEN_COMPACT_PARTS lowered to 2 the seen-delta chain is
+    compacted (and the superseded deltas freed) every generation; the
+    crawl must still equal the simulator, and of the seen chain only the
+    compacted base may keep checkpoint blocks."""
+    import cdx_writer_spark.frontier.crawl as crawl_mod
+    monkeypatch.setattr(crawl_mod, "SEEN_COMPACT_PARTS", 2)
+    pages, seeds, robots, _rows = sim_world
+    cfg = CrawlConfig(per_host_budget=2, global_batch=200,
+                      bloom_min_keys=bloom_min_keys)
+    gens = 4
+    sc = spark.sparkContext
+
+    def n_persisted():
+        return len(sc._jsc.sc().getRDDStorageInfo())
+
+    before = n_persisted()
+    f, seen, cdx, metrics = run_crawl(spark, pages, seeds, robots, cfg, gens)
+    survivors = n_persisted() - before
+    # per gen only parsed (it backs the returned cdx); plus the compacted
+    # seen base and the live frontier
+    assert survivors <= gens + 2, \
+        f"{survivors} persisted RDDs survive a {gens}-gen compacting crawl"
+    _check_against_simulator(sim_world, cfg, gens, f, seen, cdx, metrics)

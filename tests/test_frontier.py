@@ -52,8 +52,7 @@ def test_text_extraction_byte_identical(spark, world):
 
 def test_crawl_deterministic_under_repartitioning(spark, world):
     pages, seeds, robots = world
-    cfg = CrawlConfig(per_host_budget=2, global_batch=200,
-                      collect_metrics=False)
+    cfg = CrawlConfig(per_host_budget=2, global_batch=200)
 
     def run(parts):
         f, seen, cdx, m = run_crawl(spark, pages.repartition(parts),
@@ -92,11 +91,10 @@ def test_bloom_prefilter_matches_exact(spark):
 
 def test_robots_gate_blocks_banned_paths(spark, world):
     pages, seeds, robots = world
-    cfg = CrawlConfig(per_host_budget=2, global_batch=300,
-                      collect_metrics=False)
+    cfg = CrawlConfig(per_host_budget=2, global_batch=300)
     frontier = init_frontier(seeds)
     seen = frontier.select("urlkey")
-    nf, _, _, _ = crawl_step(pages, frontier, seen, robots, cfg, 0)
+    nf, _, _ = crawl_step(pages, frontier, seen, robots, cfg, 0)
     banned_hosts = {r["host"] for r in robots.collect()}
     newly = nf.filter(F.col("generation") == 1)
     offenders = (newly.filter(F.col("host").isin(list(banned_hosts))
@@ -169,38 +167,12 @@ def test_legacy_checkpoint_full_snapshot_load(spark, tmp_path):
     assert seen.count() == 100, "legacy snapshots must not be unioned"
 
 
-def test_fused_generations_equal_unfused(spark, world):
-    """The fused small-generation mode (2 jobs/gen, lazy checkpoints, seen
-    delta derived from the frontier snapshot) must be result-identical to
-    the fully-materialized big-generation path — it is a scheduling
-    change, never a semantics change.  Covers the exact join alone and
-    with the seen filter live from the first key."""
-    pages, seeds, robots = world
-    for bloom_kw in (dict(), dict(bloom_min_keys=1)):
-        base = dict(per_host_budget=2, global_batch=200, **bloom_kw)
-        cfg_fused = CrawlConfig(fuse_below_rows=10**9, **base)
-        cfg_big = CrawlConfig(fuse_below_rows=0, **base)
-
-        def run(cfg):
-            f, seen, cdx, m = run_crawl(spark, pages, seeds, robots, cfg, 3)
-            return (sorted(r["urlkey"] for r in seen.collect()),
-                    sorted((r["urlkey"], r["generation"])
-                           for r in cdx.collect()),
-                    sorted(tuple(r) for r in f.collect()),
-                    [(x["scheduled"], x["novel"]) for x in m])
-        a, b = run(cfg_fused), run(cfg_big)
-        assert a[0] == b[0], f"seen differs fused-vs-unfused ({bloom_kw})"
-        assert a[1] == b[1], f"cdx differs fused-vs-unfused ({bloom_kw})"
-        assert a[2] == b[2], f"frontier differs fused-vs-unfused ({bloom_kw})"
-        assert a[3] == b[3], f"metrics differ fused-vs-unfused ({bloom_kw})"
-
-
 def test_checkpoint_blocks_actually_freed(spark, world):
     """Dataset.unpersist() is a no-op for localCheckpoint blocks on Spark
     4.1.2; the loop must free them via util.free_checkpoint or the block
     store grows monotonically.  Bound what survives a 3-generation crawl:
     per generation only parsed (backs the returned cdx) and the seen-part
-    handle may remain, plus the live frontier and seen-filter table."""
+    handle may remain, plus the seed-keys part and the live frontier."""
     sc = spark.sparkContext
 
     def n_persisted():
@@ -212,8 +184,10 @@ def test_checkpoint_blocks_actually_freed(spark, world):
     gens = 3
     run_crawl(spark, pages, seeds, robots, cfg, gens)
     survivors = n_persisted() - before
-    # fused path: init frontier + per gen (parsed + frontier snapshot);
-    # anything above that means scratch (selected / bloom-flagged) leaked
+    # per gen: parsed + the seen-delta checkpoint; plus the seed-keys
+    # delta and the live frontier.  Anything above that means scratch
+    # (selected / filter-flagged), a superseded frontier or the final
+    # filter table leaked
     assert survivors <= 2 * gens + 2, \
         f"{survivors} persisted RDDs survive a {gens}-gen crawl"
 
@@ -338,10 +312,12 @@ def test_robots_rules_parser(spark):
     assert got_g == [("h1.example", "disallow", "/google-only")]
 
 
-def test_big_batch_join_path_equals_broadcast(spark, world):
+def test_big_batch_join_path_equals_broadcast(spark, world, monkeypatch):
     """Forcing the big-batch join strategy (bloom-prefiltered shuffle
-    fetch + shuffle leftover anti-join) must be result-identical to the
-    broadcast path — join strategy is a cost decision, not semantics."""
+    fetch + shuffle leftover anti-join, AQE left on) must be
+    result-identical to the broadcast path — join strategy is a cost
+    decision, not semantics."""
+    import cdx_writer_spark.frontier.crawl as crawl_mod
     pages, seeds, robots = world
     base = dict(per_host_budget=2, global_batch=200)
     def run(cfg):
@@ -350,7 +326,8 @@ def test_big_batch_join_path_equals_broadcast(spark, world):
                 sorted((r["urlkey"], r["generation"]) for r in cdx.collect()),
                 sorted(tuple(r) for r in f.collect()))
     a = run(CrawlConfig(**base))
-    b = run(CrawlConfig(broadcast_batch_max_rows=0, **base))
+    monkeypatch.setattr(crawl_mod, "BROADCAST_BATCH_MAX_ROWS", 0)
+    b = run(CrawlConfig(**base))
     assert a == b, "big-batch join strategy changed results"
 
 
@@ -428,7 +405,7 @@ def test_crawl_with_cuckoo_equals_exact(spark, world):
         for gen in range(2):
             filt = build_sharded_cuckoo(seen, "urlkey", n_shards=4,
                                         capacity=200000)
-            frontier, new_seen, cdx, m = crawl_mod.crawl_step(
+            frontier, cdx, m = crawl_mod.crawl_step(
                 pages, frontier, seen, robots, cfg, gen, bloom=filt)
             frontier = frontier.localCheckpoint(eager=True)
             new_seen = frontier.where(
@@ -644,7 +621,8 @@ def test_cuckoo_filter_matches_exact(spark):
 
 
 @pytest.mark.parametrize("mode", ["sharded"])
-def test_crawl_with_bloom_equals_exact(spark, world, filter_builds, mode):
+def test_crawl_with_bloom_equals_exact(spark, world, filter_builds, mode,
+                                       monkeypatch):
     """The crawl must produce identical seen/cdx with every filter it
     deploys switched on at once: the filters are an optimization, never
     a semantics change.  ``mode`` names the seen-filter deployment — the
@@ -653,8 +631,7 @@ def test_crawl_with_bloom_equals_exact(spark, world, filter_builds, mode):
     pages, seeds, robots = world
     base = dict(per_host_budget=2, global_batch=200)
     cfg_exact = CrawlConfig(**base)
-    cfg_filtered = CrawlConfig(bloom_min_keys=1, broadcast_batch_max_rows=0,
-                               **base)
+    cfg_filtered = CrawlConfig(bloom_min_keys=1, **base)
 
     def run(cfg):
         f, seen, cdx, m = run_crawl(spark, pages, seeds, robots, cfg, 3)
@@ -663,6 +640,8 @@ def test_crawl_with_bloom_equals_exact(spark, world, filter_builds, mode):
                        for r in cdx.collect()))
     e = run(cfg_exact)
     assert not filter_builds
+    import cdx_writer_spark.frontier.crawl as crawl_mod
+    monkeypatch.setattr(crawl_mod, "BROADCAST_BATCH_MAX_ROWS", 0)
     b = run(cfg_filtered)
     assert filter_builds, f"vacuous: the {mode} seen filter never engaged"
     assert e[0] == b[0], f"seen-set differs under {mode} filter"
@@ -923,9 +902,11 @@ def test_frontier_top_is_exact_and_reads_head_files_only(spark, tmp_path):
 
 
 def test_aqe_restored_after_loop_and_on_failure(spark, world):
-    """run_crawl disables AQE for broadcast-path fused generations; the
-    session value must come back at loop exit AND when the loop dies
-    mid-generation (the session outlives the loop)."""
+    """run_crawl disables AQE for a fresh broadcast-fetch run
+    (global_batch at most BROADCAST_BATCH_MAX_ROWS); the session value
+    must come back at
+    loop exit AND when the loop dies mid-generation (the session
+    outlives the loop)."""
     import pytest as _pytest
 
     pages, seeds, robots = world
@@ -1067,24 +1048,33 @@ def test_frontier_top_priority_ties_across_file_boundaries(spark, tmp_path):
 
 
 def test_overlap_plan_parity_and_engagement(spark, world):
-    """CrawlConfig(overlap_plan=True) pre-builds generation g+1's plan on
-    a second driver thread while g's job runs — results must be
-    IDENTICAL to the sequential build (seen, cdx, frontier), the
-    speculative plan must actually engage (non-vacuous), and a loop that
-    invalidates the speculation (filter rebuilt every generation) must
-    fall back to fresh builds with identical results too."""
+    """run_crawl pre-builds generation g+1's plan on a second driver
+    thread while g's job runs.  Results must equal the reference
+    simulator's (seen, cdx, frontier), the speculative plan must
+    actually engage (non-vacuous), and a loop that invalidates the
+    speculation (filter rebuilt every generation) must fall back to
+    fresh builds with the same results."""
+    from tests.test_crawl_simulator import simulate_crawl
     pages, seeds, robots = world
     base = dict(per_host_budget=2, global_batch=200)
+    gens = 3
 
     def run(cfg):
-        f, seen, cdx, m = run_crawl(spark, pages, seeds, robots, cfg, 3)
+        f, seen, cdx, m = run_crawl(spark, pages, seeds, robots, cfg, gens)
         return (sorted(r["urlkey"] for r in seen.collect()),
                 sorted((r["urlkey"], r["generation"]) for r in cdx.collect()),
                 sorted(tuple(r) for r in f.collect()), m)
 
-    seq = run(CrawlConfig(overlap_plan=False, **base))
-    ovl = run(CrawlConfig(overlap_plan=True, **base))
-    assert seq[:3] == ovl[:3], "overlap_plan changed crawl results"
+    cfg = CrawlConfig(**base)
+    sim_cdx, sim_seen, sim_frontier = simulate_crawl(
+        pages.select("url", "warc_ts", "html").collect(), seeds.collect(),
+        robots.collect(), cfg, gens)
+    want = (sorted(sim_seen), sorted((r[0], r[10]) for r in sim_cdx),
+            sorted((k, u, h, p, g)
+                   for k, (p, u, h, g) in sim_frontier.items()))
+
+    ovl = run(cfg)
+    assert ovl[:3] == want, "overlapped crawl diverges from simulator"
     assert any(m.get("plan_overlapped") for m in ovl[3]), \
         "vacuous: no generation used a pre-built plan"
     # growth-aware frontier-size speculation (extrapolating the last
@@ -1099,10 +1089,9 @@ def test_overlap_plan_parity_and_engagement(spark, world):
     # seen filter live from the first key: its per-generation insert
     # replaces the filter object, so no generation may use (or build) a
     # speculative plan, and the results must still match
-    seq_b = run(CrawlConfig(overlap_plan=False, bloom_min_keys=1, **base))
-    ovl_b = run(CrawlConfig(overlap_plan=True, bloom_min_keys=1, **base))
-    assert seq_b[:3] == ovl_b[:3], \
-        "overlap_plan changed results under live-filter maintenance"
+    ovl_b = run(CrawlConfig(bloom_min_keys=1, **base))
+    assert ovl_b[:3] == want, \
+        "crawl diverges from simulator under live-filter maintenance"
     assert not any(m.get("plan_overlapped") for m in ovl_b[3]), \
         "a generation overlapped while the seen filter was live"
 
