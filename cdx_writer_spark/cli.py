@@ -11,7 +11,9 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import Observation, functions as F
+from pyspark.sql import Observation, SparkSession, functions as F
+
+from .util import restore_conf
 
 
 def main(argv=None):
@@ -51,9 +53,8 @@ def main(argv=None):
 
     from .kernels.fields import CDX_DEFAULT_FORMAT  # noqa: F401  (parity)
     from .kernels.pipeline import load_excludes
-    from .operators.cdx import FIELD_COLUMNS, cdx_fields, cdx_lines
+    from .operators.cdx import FIELD_COLUMNS
     from .session import get_spark
-    from .sources.warc import read_warc_records
 
     for f in args.format.split():
         if f not in FIELD_COLUMNS:
@@ -64,12 +65,30 @@ def main(argv=None):
         with open(args.exclude_list) as fh:
             excludes = load_excludes(fh.read())
 
+    # get_spark re-applies its settings to a caller's live session, and
+    # the Arrow batch size below is this job's alone: a library caller
+    # (tests, benchmarks) gets its runtime conf back however the call ends
+    caller = SparkSession.getActiveSession()
+    before = dict(caller.conf.getAll) if caller is not None else None
     spark = get_spark(app_name="cdx-writer", cores=args.cores)
+    if before is None:
+        before = dict(spark.conf.getAll)
     spark.sparkContext.setLogLevel("ERROR")
     # WARC payload rows are MB-scale (up to 5 MB html is still parsed,
     # cdx_writer.py:71-73): cap Arrow batches well below the session
     # default, which is tuned for KB-scale page rows.
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
+    try:
+        _index(spark, args, inputs, out_path, excludes)
+    finally:
+        restore_conf(spark, before)
+
+
+def _index(spark, args, inputs, out_path, excludes) -> None:
+    """Build the index job for ``main``'s parsed options and run it."""
+    from .operators.cdx import cdx_fields, cdx_lines
+    from .sources.warc import read_warc_records
+
     records = read_warc_records(spark, inputs,
                                 use_full_path=args.use_full_path,
                                 strict=args.strict)

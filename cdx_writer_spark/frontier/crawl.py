@@ -42,7 +42,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.udfs import surt_and_host
-from ..util import ensure_checkpointed, free_checkpoint
+from ..util import ensure_checkpointed, free_checkpoint, per_context
 
 __all__ = ["CrawlConfig", "init_frontier", "crawl_step", "run_crawl",
            "load_state", "page_cdx", "frontier_top"]
@@ -90,20 +90,7 @@ def _union_all(parts: list[DataFrame]) -> DataFrame:
     return out
 
 
-def _active_ctx():
-    """The live SparkContext — the cache key for process-lifetime Column
-    caches below.  py4j-backed Column objects hold Java references into
-    one gateway; if the JVM is torn down and relaunched in a long-lived
-    process, a cache keyed only on the module would serve stale handles
-    that fail opaquely, so the caches rebuild whenever the context
-    object changes."""
-    from pyspark import SparkContext
-    return SparkContext._active_spark_context
-
-
-_PARSE_COLS: "tuple | None" = None   # (SparkContext, cols)
-
-
+@per_context
 def _parse_cols() -> tuple:
     """The parse stage's projection Columns (content digest as sha1+base32
     expression arithmetic, html length, JVM-extracted hrefs -> python
@@ -114,17 +101,12 @@ def _parse_cols() -> tuple:
     of pure driver py4j time per generation (the base32 bit-algebra tree
     alone is ~300 nodes = hundreds of gateway round-trips), a straight
     addition to the loop's core-count-independent Amdahl term."""
-    global _PARSE_COLS
-    ctx = _active_ctx()
-    if _PARSE_COLS is None or _PARSE_COLS[0] is not ctx:
-        from ..functions.udfs import normalize_links, raw_hrefs_expr
-        from ..operators.cdx import sha1_b32_binary_expr
-        _PARSE_COLS = (ctx, (
-            sha1_b32_binary_expr(F.col("html")).alias("checksum"),
+    from ..functions.udfs import normalize_links, raw_hrefs_expr
+    from ..operators.cdx import sha1_b32_binary_expr
+    return (sha1_b32_binary_expr(F.col("html")).alias("checksum"),
             F.length("html").alias("html_len"),
             normalize_links(raw_hrefs_expr(F.col("html")), F.col("url"))
-            .alias("outlinks")))
-    return _PARSE_COLS[1]
+            .alias("outlinks"))
 
 
 @dataclass
@@ -359,18 +341,12 @@ def robots_rules_table(robots: DataFrame) -> DataFrame:
                             wild_rule)).alias("allows_w")))
 
 
-_GATE_KEEP: "tuple | None" = None   # (SparkContext, Column)
-
-
+@per_context
 def _gate_keep_col() -> "F.Column":
     """``NOT blocked`` filter over a candidates-⋈-rules row, cached per
     SparkContext (pure unresolved-attribute expression: ~100 py4j calls
     plus four aggregate-lambda closures per build, all per-generation
-    driver time before this cache; see _active_ctx for the keying)."""
-    global _GATE_KEEP
-    ctx = _active_ctx()
-    if _GATE_KEEP is not None and _GATE_KEEP[0] is ctx:
-        return _GATE_KEEP[1]
+    driver time before this cache)."""
     path = _pct_norm_expr(F.regexp_replace("url", r"^https?://[^/]*", ""))
 
     def longest_match(plain, wild):
@@ -387,9 +363,8 @@ def _gate_keep_col() -> "F.Column":
                                   & (r["n"] > acc), r["n"]).otherwise(acc))
         return F.greatest(lp, lw)
 
-    _GATE_KEEP = (ctx, ~(longest_match(F.col("bans"), F.col("bans_w"))
-                         > longest_match(F.col("allows"), F.col("allows_w"))))
-    return _GATE_KEEP[1]
+    return ~(longest_match(F.col("bans"), F.col("bans_w"))
+             > longest_match(F.col("allows"), F.col("allows_w")))
 
 
 def robots_gate(candidates: DataFrame, robots: DataFrame | None = None,

@@ -25,6 +25,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from ..util import per_context
 from .exclude import _prefix_flag_merge, driver_prober
 
 __all__ = ["cdx_fields", "cdx_lines", "date_expr", "FIELD_COLUMNS"]
@@ -241,20 +242,28 @@ def _make_url_meta_udf(probe=None):
     return _struct_udf(_py_url_meta_udf, _PY_URL_SCHEMA, probe)
 
 
-def _jvm_fields(df: DataFrame) -> DataFrame:
+@per_context
+def _jvm_field_stages() -> tuple:
     """Byte-level CDX kernels as Column expressions (P5/P6/P12/P15 plus the
     header extraction for P4/P7) — the reference semantics of
     cdx_writer.py:399-425,429-457,585-620,105-114 with zero python transfer.
+    Returns the ``(name, Column)`` stages that _jvm_fields applies in
+    order; built once per SparkContext, since building the ~30 string
+    expressions through py4j cost more driver time per call than
+    applying them.
 
     The payload is viewed through a lossless latin-1 decode so string
     functions (regexp, substring, sha1-over-encode) operate on exact byte
     positions; char i == byte i."""
+    stages: list = []
+
+    def stage(name: str, col: Column) -> Column:
+        stages.append((name, col))
+        return F.col(name)
+
     rt = F.col("record_type")
-    df = df.withColumn("_pay", F.decode(F.col("payload"), "ISO-8859-1"))
-    pay = F.col("_pay")
-    df = df.withColumn(
-        "_is_http", (rt == "response") & pay.startswith("HTTP"))
-    is_http = F.col("_is_http")
+    pay = stage("_pay", F.decode(F.col("payload"), "ISO-8859-1"))
+    is_http = stage("_is_http", (rt == "response") & pay.startswith("HTTP"))
     # P15 split on the FIRST \r?\n\r?\n (python _CRLF_SPLIT.split(payload, 1)).
     # Any match of \r?\n\r?\n starts with one of exactly four literals, so
     # the leftmost match position is the min of four intrinsic indexOf
@@ -268,10 +277,8 @@ def _jvm_fields(df: DataFrame) -> DataFrame:
                    pay.substr(F.lit(1), pos4 + 1)).otherwise(pay)
     locs = [F.nullif(F.locate(lit, head4), F.lit(0))
             for lit in ("\n\n", "\n\r\n", "\r\n\n")]
-    df = df.withColumn(
-        "_pos",
-        F.when(is_http, F.coalesce(F.least(pos4, *locs), F.lit(0))))
-    pos = F.col("_pos")
+    pos = stage("_pos",
+                F.when(is_http, F.coalesce(F.least(pos4, *locs), F.lit(0))))
     # greedy match length at _pos (python regex prefers the longest here)
     s4 = pay.substr(pos, F.lit(4))
     sep_len = (F.when(s4.startswith("\r\n\r\n"), F.lit(4))
@@ -280,22 +287,19 @@ def _jvm_fields(df: DataFrame) -> DataFrame:
                .otherwise(F.lit(2)))
     hdrs = (F.when(is_http & (pos > 0), pay.substr(F.lit(1), pos - 1))
             .when(is_http, pay))
-    df = (df.withColumn("_hdrs", hdrs)
-            .withColumn("_sep_len", sep_len)
-            .withColumn("_has_body", F.coalesce(is_http & (pos > 0),
-                                                F.lit(False))))
-    sep_len = F.col("_sep_len")
-    has_body = F.col("_has_body")
+    hdrs = stage("_hdrs", hdrs)
+    sep_len = stage("_sep_len", sep_len)
+    has_body = stage("_has_body", F.coalesce(is_http & (pos > 0),
+                                             F.lit(False)))
     # 1-based char offset of the body inside _pay (== byte offset inside
     # payload: the header region is ASCII wherever a split was found)
     cstart = pos + sep_len
 
     # P18 is_response: ^application/http;\s*msgtype=response$ case-insens.
-    df = df.withColumn(
+    is_resp_ct = stage(
         "_is_resp_ct",
         F.decode(F.col("content_type"), "ISO-8859-1")
         .rlike(r"(?i)^application/http;\s*msgtype=response$"))
-    is_resp_ct = F.col("_is_resp_ct")
 
     # P5 status: anchored HTTP(/d.d)? (ddd).  The anchored match can only
     # span the first ~20 chars, so scan a 64-char prefix — java regex
@@ -304,7 +308,7 @@ def _jvm_fields(df: DataFrame) -> DataFrame:
         rt == "response",
         F.coalesce(
             F.nullif(F.regexp_extract(
-                F.col("_pay").substr(F.lit(1), F.lit(64)),
+                pay.substr(F.lit(1), F.lit(64)),
                 r"^HTTP(?:/\d\.\d)? (\d+)", 1), F.lit("")),
             F.lit("-"))
     ).otherwise(F.lit("-"))
@@ -312,7 +316,7 @@ def _jvm_fields(df: DataFrame) -> DataFrame:
     # P12 first matching header line (python: pat.match per splitlines line)
     def header(name: str) -> Column:
         return F.nullif(F.regexp_extract(
-            F.col("_hdrs"),
+            hdrs,
             r"(?im)^" + name + r":[ \t\x0B\f]*([^\r\n]+)", 1), F.lit(""))
 
     # P4 mime — staged columns so each regexp runs ONCE per row:
@@ -320,49 +324,44 @@ def _jvm_fields(df: DataFrame) -> DataFrame:
     # once, keeping the generated code linear instead of the ~12x textual
     # expansion a single nested CASE tree produces.
     strip_re = r"^[ \t\n\r\x0B\f]+|[ \t\n\r\x0B\f]+$"
-    df = df.withColumn("_ct_hdr", header("content-type"))
-    df = df.withColumn(
-        "_ct_stripped", F.regexp_replace(F.col("_ct_hdr"), strip_re, ""))
-    df = df.withColumn(
-        "_pre_semi_m", F.regexp_extract(F.col("_ct_stripped"), r"^(.+?);", 1))
-    pre_semi = (F.when(F.col("_pre_semi_m") != "", F.col("_pre_semi_m"))
-                .otherwise(F.col("_ct_stripped")))
-    df = df.withColumn("_pre_semi", pre_semi)
+    ct_hdr = stage("_ct_hdr", header("content-type"))
+    ct_stripped = stage("_ct_stripped",
+                        F.regexp_replace(ct_hdr, strip_re, ""))
+    pre_semi_m = stage("_pre_semi_m",
+                       F.regexp_extract(ct_stripped, r"^(.+?);", 1))
+    pre_semi = stage("_pre_semi", F.when(pre_semi_m != "", pre_semi_m)
+                     .otherwise(ct_stripped))
     mime_http = (
-        F.when(F.col("_ct_hdr").isNull() | (F.col("_ct_stripped") == ""),
-               F.lit("unk"))
-        .when(F.col("_pre_semi").rlike(r"^[a-z0-9\-\.\+/]+$"),
-              F.col("_pre_semi"))
+        F.when(ct_hdr.isNull() | (ct_stripped == ""), F.lit("unk"))
+        .when(pre_semi.rlike(r"^[a-z0-9\-\.\+/]+$"), pre_semi)
         .otherwise(F.lit("unk")))
     ct_raw = F.decode(F.col("content_type"), "ISO-8859-1")
-    df = df.withColumn(
-        "_ct_replaced", F.replace(ct_raw, F.lit("no-type"), F.lit("unk")))
+    ct_replaced = stage("_ct_replaced",
+                        F.replace(ct_raw, F.lit("no-type"), F.lit("unk")))
     mime_resp_other = (
         F.when(F.col("content_type").isNull(), F.lit("unk"))
-        .when(F.col("_ct_replaced").rlike(r"[^\x00-\x7F]"), F.lit("unk"))
-        .otherwise(F.col("_ct_replaced")))
+        .when(ct_replaced.rlike(r"[^\x00-\x7F]"), F.lit("unk"))
+        .otherwise(ct_replaced))
     mime = (F.when((rt == "response") & is_resp_ct, mime_http)
             .when(rt == "response", mime_resp_other)
             .when(rt == "warcinfo", F.lit("warc-info"))
             .otherwise(F.concat(
                 F.lit("warc/"),
                 F.regexp_replace(rt, r"[^\x00-\x7F]", "?"))))
-    df = df.withColumn("_mime", mime)
+    mime = stage("_mime", mime)
 
     # P6 checksum: header digest else fabricated base32(sha1(body)).
     # The sha1 runs JVM-side (native, no payload transfer); the cheap
     # hex->base32 of the 40-char digest happens in the python UDF where
     # base64.b32encode is a C call (a pure-expression base32 costs ~12us/row
     # in conv/element_at trees — measured, see sha1_b32_expr docstring).
-    df = df.withColumn(
-        "_digest", F.replace(F.col("payload_digest"), F.lit("sha1:"),
-                             F.lit("")))
-    digest = F.col("_digest")
+    digest = stage("_digest", F.replace(F.col("payload_digest"),
+                                        F.lit("sha1:"), F.lit("")))
     # resolved-without-fabrication part of the CASE; NULL means "fabricate"
     checksum_pre = (
         F.when(rt == "revisit", F.coalesce(digest, F.lit("-")))
         .when((rt == "response") & (is_resp_ct | has_body), digest))
-    df = df.withColumn("_checksum_pre", checksum_pre)
+    checksum_pre = stage("_checksum_pre", checksum_pre)
     # hash the BINARY body slice directly (substring on BinaryType is
     # byte-positional) — same bytes as the latin-1 _content view, minus a
     # decode/encode round trip per row
@@ -375,9 +374,7 @@ def _jvm_fields(df: DataFrame) -> DataFrame:
                F.coalesce(content_bin, F.col("payload"), empty_bin))
         .when((rt == "response") & has_body, content_bin)
         .otherwise(F.coalesce(F.col("payload"), empty_bin)))
-    df = df.withColumn(
-        "_fab_hex",
-        F.when(F.col("_checksum_pre").isNull(), F.sha1(fab_body)))
+    stage("_fab_hex", F.when(checksum_pre.isNull(), F.sha1(fab_body)))
 
     # P7 inputs: x-robots-tag header + a bounded html-head slice for the
     # python meta scan.  Reference scans <meta> tags up to (?i)</head> (or
@@ -393,22 +390,20 @@ def _jvm_fields(df: DataFrame) -> DataFrame:
     # All of it runs only for ≤5MB text/html response bodies (meta_gate) —
     # the old plan scanned+lowered every body twice, html or not.
     clen = F.col("content_length_hdr")
-    meta_gate = ((rt == "response") & (F.col("_mime") == "text/html")
-                 & has_body & (clen.isNull() | (clen <= META_PARSE_LIMIT)))
-    df = df.withColumn("_mgate", meta_gate)
-    mgate = F.col("_mgate")
-    df = df.withColumn(
+    mgate = stage("_mgate",
+                  (rt == "response") & (mime == "text/html") & has_body
+                  & (clen.isNull() | (clen <= META_PARSE_LIMIT)))
+    hpf = stage(
         "_hpf",
         F.when(mgate,
                F.nullif(F.call_function("locate", F.lit("</head>"), pay,
                                         cstart), F.lit(0)) - cstart + 1))
     body_low = F.lower(pay.substr(
-        cstart, F.coalesce(F.col("_hpf") + 6, F.length(pay))))
-    df = df.withColumn(
+        cstart, F.coalesce(hpf + 6, F.length(pay))))
+    hp = stage(
         "_hp",
         F.when(mgate, F.coalesce(F.nullif(F.locate("</head>", body_low),
                                           F.lit(0)), F.lit(0))))
-    hp = F.col("_hp")
     # the slice ships as BINARY cut straight from the payload: char
     # offsets in the latin-1 view ARE byte offsets, so one binary
     # substring replaces the string-substr + encode round trip (two
@@ -425,13 +420,76 @@ def _jvm_fields(df: DataFrame) -> DataFrame:
                                   hp + F.lit(4102)))
                .otherwise(F.substring(F.col("payload"), cstart,
                                       F.length("payload"))))
-    df = (df.withColumn("_status", status)
-            .withColumn("_x_robots", header("x-robots-tag"))
-            .withColumn("_meta_slice", F.when(mgate, slice_b)))
-    return df.drop("_pay", "_is_http", "_pos", "_hdrs", "_sep_len",
-                   "_has_body", "_is_resp_ct", "_ct_hdr", "_ct_stripped",
-                   "_pre_semi_m", "_pre_semi", "_ct_replaced", "_digest",
-                   "_mgate", "_hpf", "_hp")
+    stage("_status", status)
+    stage("_x_robots", header("x-robots-tag"))
+    stage("_meta_slice", F.when(mgate, slice_b))
+    return tuple(stages)
+
+
+# _jvm_field_stages' intermediates; cdx_fields reads the other stages
+_JVM_SCRATCH = ("_pay", "_is_http", "_pos", "_hdrs", "_sep_len", "_has_body",
+                "_is_resp_ct", "_ct_hdr", "_ct_stripped", "_pre_semi_m",
+                "_pre_semi", "_ct_replaced", "_digest", "_mgate", "_hpf",
+                "_hp")
+
+
+def _jvm_fields(df: DataFrame) -> DataFrame:
+    """Apply _jvm_field_stages one ``withColumn`` each, in order: each
+    stage reads the columns of the ones before it, and the staging keeps
+    the generated code linear (see the mime note in _jvm_field_stages)."""
+    for name, col in _jvm_field_stages():
+        df = df.withColumn(name, col)
+    return df.drop(*_JVM_SCRATCH)
+
+
+@per_context
+def _record_filters(screenshot_mode: bool, all_records: bool) -> tuple:
+    """cdx_fields' native row filters, applied in this order before the
+    Python stage."""
+    if screenshot_mode:
+        # screenshot WARCs keep only metadata records (cdx_writer.py:660-662)
+        kind = (F.col("record_type") == "metadata",)
+    elif not all_records:
+        # F1 (reference cdx_writer.py:643-646,660-664)
+        kind = (F.col("record_type").isin("response", "revisit")
+                & (F.col("content_type").isNull()
+                   | (F.col("content_type") != F.lit(b"text/dns"))),)
+    else:
+        kind = ()
+    # F2: negative declared Content-Length (cdx_writer.py:666-670)
+    clen = F.col("content_length_hdr")
+    return kind + (clen.isNull() | (clen >= 0),)
+
+
+@per_context
+def _projection(screenshot_mode: bool, probed: bool) -> tuple:
+    """cdx_fields' output Columns over the ``_py`` struct (and, on the hot
+    path, the JVM field stages), plus the ``NOT excluded`` filter."""
+    if screenshot_mode:
+        mime_c = F.col("_py.mime")
+        status_c = F.col("_py.status")
+        checksum_c = F.col("_py.checksum")
+    else:
+        mime_c = F.col("_mime")
+        status_c = F.col("_status")
+        checksum_c = F.coalesce(F.col("_checksum_pre"),
+                                F.col("_py.checksum_fab"))
+    cols = (
+        F.col("_py.urlkey").alias("urlkey"),
+        date_expr(F.col("date_raw")).alias("cdx_date"),
+        F.col("_py.original_url").alias("original_url"),
+        mime_c.alias("mime"),
+        status_c.alias("status_code"),
+        checksum_c.alias("checksum"),
+        F.lit("-").alias("redirect"),
+        F.col("_py.meta_flags").alias("meta_flags"),
+        F.coalesce(F.col("compressed_size").cast("string"), F.lit("-")).alias("rec_size"),
+        F.col("offset").cast("string").alias("rec_offset"),
+        F.col("filename").alias("warc_name"),
+        F.col("record_idx"),
+        (F.col("_py.excluded") if probed else F.lit(False)).alias("excluded"),
+    )
+    return cols, ~F.col("excluded")
 
 
 def cdx_fields(records: DataFrame, *, all_records: bool = False,
@@ -457,63 +515,39 @@ def cdx_fields(records: DataFrame, *, all_records: bool = False,
             probe = records.sparkSession.sparkContext.broadcast(prober)
 
     df = records
-    if screenshot_mode:
-        # screenshot WARCs keep only metadata records (cdx_writer.py:660-662)
-        df = df.filter(F.col("record_type") == "metadata")
-    elif not all_records:
-        # F1 (reference cdx_writer.py:643-646,660-664)
-        df = df.filter(
-            F.col("record_type").isin("response", "revisit")
-            & (F.col("content_type").isNull()
-               | (F.col("content_type") != F.lit(b"text/dns"))))
-    # F2: negative declared Content-Length (cdx_writer.py:666-670)
-    df = df.filter(F.col("content_length_hdr").isNull()
-                   | (F.col("content_length_hdr") >= 0))
-
+    for cond in _record_filters(screenshot_mode, all_records):
+        df = df.filter(cond)
     if screenshot_mode:
         # niche path: keep the reference-shaped all-python kernel
         udf = _make_py_fields_udf(True, probe)
         df = df.withColumn("_py", udf(
             "record_type", "url_raw", "content_type", "payload",
             "content_length_hdr", "payload_digest", "sfps", "filename"))
-        mime_c = F.col("_py.mime")
-        status_c = F.col("_py.status")
-        checksum_c = F.col("_py.checksum")
     else:
         # hot path: byte-heavy kernels as whole-stage-codegen Column exprs
         # over the latin-1 (lossless bytes<->chars) view of the payload;
         # python sees only url bytes + a bounded html-head slice.
         df = _jvm_fields(df)
-        mime_c = F.col("_mime")
-        status_c = F.col("_status")
-        checksum_c = F.coalesce(F.col("_checksum_pre"),
-                                F.col("_py.checksum_fab"))
         df = df.withColumn("_py", _make_url_meta_udf(probe)(
             "record_type", "url_raw", "filename", "_meta_slice",
             "_x_robots", "sfps", "_fab_hex"))
-
-    df = df.select(
-        F.col("_py.urlkey").alias("urlkey"),
-        date_expr(F.col("date_raw")).alias("cdx_date"),
-        F.col("_py.original_url").alias("original_url"),
-        mime_c.alias("mime"),
-        status_c.alias("status_code"),
-        checksum_c.alias("checksum"),
-        F.lit("-").alias("redirect"),
-        F.col("_py.meta_flags").alias("meta_flags"),
-        F.coalesce(F.col("compressed_size").cast("string"), F.lit("-")).alias("rec_size"),
-        F.col("offset").cast("string").alias("rec_offset"),
-        F.col("filename").alias("warc_name"),
-        F.col("record_idx"),
-        (F.col("_py.excluded") if probe is not None
-         else F.lit(False)).alias("excluded"),
-    )
+    cols, not_excluded = _projection(screenshot_mode, probe is not None)
+    df = df.select(*cols)
     if merge is not None:
         df = _prefix_flag_merge(df.drop("excluded"), merge, "urlkey",
                                 "excluded", None)
     if not keep_excluded_flag:
-        df = df.filter(~F.col("excluded")).drop("excluded")
+        df = df.filter(not_excluded).drop("excluded")
     return df
+
+
+@per_context
+def _line_columns(fmt: str) -> tuple:
+    """cdx_lines' ``cdx_line`` Column and the sort key Columns it keeps."""
+    cols = [FIELD_COLUMNS[f] for f in fmt.split()]
+    keep = tuple(F.col(c) for c in ("urlkey", "cdx_date") if c in cols)
+    return (F.rtrim(F.concat_ws(" ", *[F.col(c) for c in cols]))
+            .alias("cdx_line"), keep)
 
 
 def cdx_lines(fields_df: DataFrame, fmt: str = "N b a m s k r M S V g",
@@ -521,11 +555,9 @@ def cdx_lines(fields_df: DataFrame, fmt: str = "N b a m s k r M S V g",
     """Serialize to one-line-per-record (reference cdx_writer.py:683-699).
     ``sort=True`` produces the CDX convention (urlkey, date) global order via
     a range partition — the only shuffle in the pipeline."""
-    cols = [FIELD_COLUMNS[f] for f in fmt.split()]
-    keep = [c for c in ("urlkey", "cdx_date") if c in cols]
-    out = fields_df.select(
-        F.rtrim(F.concat_ws(" ", *[F.col(c) for c in cols])).alias("cdx_line"),
-        *[F.col(c) for c in keep])
+    line, keep = _line_columns(fmt)
+    out = fields_df.select(line, *keep)
     if sort and keep:
         out = (out.repartitionByRange(*keep).sortWithinPartitions(*keep))
     return out.select("cdx_line")
+

@@ -1,14 +1,17 @@
 """WARC/ARC → ``warc_records`` DataFrame source.
 
-Spark-first shape (SURVEY.md §2.1 S1/S2): distribute file PATHS (one task
-per file — WARC gzip members are not splittable mid-file, the same unit of
-parallelism the reference used: one process per WARC), then an Arrow
-``mapInPandas`` stage opens each file on its executor and STREAMS records
-out of it with the incremental kernel ``kernels.warcrec.
-stream_archive_records``: O(record) memory per task and bounded Arrow
-batches, so multi-GB archives (the reference's large-WARC layer,
-/root/reference/tests/test_large_warcs.py:7-27) never hit the 2 GiB
-single-cell Arrow limit or O(file) executor heap that a
+Spark-first shape (SURVEY.md §2.1 S1/S2): one task per file — WARC gzip
+members are not splittable mid-file, the same unit of parallelism the
+reference used: one process per WARC.  The driver expands the paths and
+broadcasts the list; a JVM ``spark.range`` with one slice per file hands
+each task the index of its file, so the read is a single Python stage
+(a Python-side path RDD would start a second Python worker in every
+task).  An Arrow ``mapInPandas`` stage opens each file on its
+executor and STREAMS records out of it with the incremental kernel
+``kernels.warcrec.stream_archive_records``: O(record) memory per task
+and bounded Arrow batches, so multi-GB archives (the reference's
+large-WARC layer, its tests/test_large_warcs.py:7-27) never hit the
+2 GiB single-cell Arrow limit or O(file) executor heap that a
 ``binaryFile``-based scan pays.
 
 The resulting envelope schema is FIXTURES.md §1.  Non-UTF-8-safe byte
@@ -115,12 +118,14 @@ def read_warc_records(spark: SparkSession, path: str | list[str],
     files = _expand_paths(path)
     if not files:
         return spark.createDataFrame([], WARC_RECORDS_SCHEMA)
-    # exactly one file per task: parallelize with one slice per path
-    # (a hash repartition on the path column can collide, putting 2+
-    # archives in one task and leaving other partitions empty)
-    paths_df = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in files], len(files)),
-        T.StructType([T.StructField("path", T.StringType())]))
+    # exactly one file per task: a JVM range with one slice per path
+    # gives each task the single id it looks its file up by (a hash
+    # repartition on a path column can collide, putting 2+ archives in
+    # one task).  The list rides as a broadcast, so each task's command
+    # stays O(1) in the file count; a parallelized Python list would
+    # cost every task an extra Python worker just to unpickle its path.
+    ids = spark.range(0, len(files), 1, len(files))
+    paths = spark.sparkContext.broadcast(files)
 
     def split_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # import inside the task so executors resolve the shipped package
@@ -128,7 +133,8 @@ def read_warc_records(spark: SparkSession, path: str | list[str],
         cols = [f.name for f in WARC_RECORDS_SCHEMA.fields]
         empty = True
         for pdf in batches:
-            for p in pdf["path"]:
+            for i in pdf["id"]:
+                p = paths.value[i]
                 bare = p[len("file:"):] if p.startswith("file:") else p
                 name = bare if use_full_path else os.path.basename(bare)
                 rows: list[dict] = []
@@ -148,4 +154,4 @@ def read_warc_records(spark: SparkSession, path: str | list[str],
         if empty:
             yield pd.DataFrame({c: [] for c in cols})
 
-    return paths_df.mapInPandas(split_files, WARC_RECORDS_SCHEMA)
+    return ids.mapInPandas(split_files, WARC_RECORDS_SCHEMA)

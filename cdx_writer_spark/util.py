@@ -2,9 +2,61 @@
 
 from __future__ import annotations
 
+import functools
+import threading
+
 from pyspark.sql import DataFrame
 
-__all__ = ["free_checkpoint", "ensure_checkpointed"]
+__all__ = ["free_checkpoint", "ensure_checkpointed", "per_context",
+           "restore_conf"]
+
+
+def _active_ctx():
+    """The live SparkContext: the cache key of ``per_context``."""
+    from pyspark import SparkContext
+    return SparkContext._active_spark_context
+
+
+def restore_conf(spark, before: dict) -> None:
+    """Set ``spark``'s runtime SQL conf back to ``before``, a
+    ``dict(spark.conf.getAll)`` snapshot: keys changed since are reset,
+    keys set since are unset; static keys are left alone."""
+    after = dict(spark.conf.getAll)
+    for k in before.keys() | after.keys():
+        if after.get(k) == before.get(k) or not spark.conf.isModifiable(k):
+            continue
+        if k in before:
+            spark.conf.set(k, before[k])
+        else:
+            spark.conf.unset(k)
+
+
+def per_context(build):
+    """Memoize ``build(*args)`` once per SparkContext.
+
+    For builders of Column expressions: a Column is an immutable
+    unresolved expression, reusable across plans, but building one costs
+    a py4j round-trip per node, paid on the driver on every call.  py4j
+    handles point into one gateway; if the JVM is torn down and
+    relaunched in a long-lived process, a module-level cache would serve
+    stale handles that fail opaquely, so the memo is dropped whenever the
+    context object changes.  ``args`` must be hashable.  Thread-safe:
+    the crawl plans a generation on a second thread."""
+    memo: dict = {}
+    key_ctx: list = [object()]     # no context matches the initial key
+    lock = threading.RLock()
+
+    @functools.wraps(build)
+    def get(*args):
+        ctx = _active_ctx()
+        with lock:
+            if key_ctx[0] is not ctx:
+                memo.clear()
+                key_ctx[0] = ctx
+            if args not in memo:
+                memo[args] = build(*args)
+            return memo[args]
+    return get
 
 
 def ensure_checkpointed(df: DataFrame) -> None:

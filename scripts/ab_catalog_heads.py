@@ -2,31 +2,41 @@
 """Interleaved A/B of flagged catalog queries between two repo checkouts
 (round-3 HEAD vs working tree), the same two-live-JVM protocol as
 ab_index_heads.py: both children hold warm sessions on the same
-testdata, the parent alternates RUN commands so this host's
-minutes-scale bursty steal/DRAM contention cancels between sides.
+testdata, the parent alternates RUN commands (and which side goes
+first in a pair) so this host's minutes-scale bursty steal/DRAM
+contention cancels between sides.
 
 Round-4 verdict task 3: q1/q5/q6/quality_score read +18-31% in
 BENCH_r04.json vs r3 with no commit touching their paths; this pairs
 the heads directly instead of comparing across host windows.
 
-Usage: ab_catalog_heads.py [old_repo] [new_repo] [pairs] [q1,q5,...]
+Each JVM runs local[N] at this host's core count with ab_cfg.py's heap
+(a quarter of RAM, at most 12 GiB, pre-touched), so both fit the host
+at once.
+
+Usage: ab_catalog_heads.py OLD_REPO [NEW_REPO] [pairs] [q1,q5,...]
+(NEW_REPO defaults to this checkout)
 """
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
+
+from ab_cfg import HEAP, JVM_OPTS
+
+CORES = len(os.sched_getaffinity(0))
 
 CHILD = r"""
 import json, sys, time
 sys.path.insert(0, {repo!r})
 import os
-os.environ["SPARK_GRAFT_DRIVER_MEM"] = "12g"
+os.environ["SPARK_GRAFT_DRIVER_MEM"] = {heap!r}
 from cdx_writer_spark.session import get_spark
 from cdx_writer_spark.plans.catalog import QUERIES
-spark = get_spark(app_name="abcat-{tag}", cores=32,
-                  extra={{"spark.driver.extraJavaOptions":
-                          "-Xms12g -XX:+AlwaysPreTouch -XX:+UseParallelGC"}})
+spark = get_spark(app_name="abcat-{tag}", cores={cores},
+                  extra={{"spark.driver.extraJavaOptions": {jvm_opts!r}}})
 spark.sparkContext.setLogLevel("ERROR")
 SF = "/root/testdata/sf0.1"
 NAMES = {names!r}
@@ -48,7 +58,8 @@ spark.stop()
 
 
 def spawn(repo, tag, names):
-    code = CHILD.format(repo=repo, tag=tag, names=names)
+    code = CHILD.format(repo=repo, tag=tag, names=names, heap=HEAP,
+                        cores=CORES, jvm_opts=JVM_OPTS)
     return subprocess.Popen([sys.executable, "-u", "-c", code], cwd=repo,
                             text=True, stdin=subprocess.PIPE,
                             stdout=subprocess.PIPE,
@@ -77,8 +88,9 @@ def best2(p):
 
 
 def main():
-    old_repo = sys.argv[1] if len(sys.argv) > 1 else "/tmp/repo_r3"
-    new_repo = sys.argv[2] if len(sys.argv) > 2 else "/root/repo"
+    old_repo = sys.argv[1]
+    new_repo = (sys.argv[2] if len(sys.argv) > 2
+                else os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     pairs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     names = (sys.argv[4].split(",") if len(sys.argv) > 4 else
              ["q1_pricing_summary", "q5_regional_revenue",
@@ -93,10 +105,13 @@ def main():
     new = spawn(new_repo, "new", names)
     read(new, "READY")
     olds, news, steals = [], [], []
-    for _ in range(pairs):
+    for i in range(pairs):
         s0 = steal()
-        olds.append(best2(old))
-        news.append(best2(new))
+        # the side that runs first alternates, so drift favours neither
+        best = {p: best2(p) for p in ((old, new) if i % 2 == 0
+                                      else (new, old))}
+        olds.append(best[old])
+        news.append(best[new])
         steals.append(steal() - s0)
     for p in (old, new):
         p.stdin.write("QUIT\n")

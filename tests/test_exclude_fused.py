@@ -107,7 +107,9 @@ def test_fused_exclude_plan_is_one_python_stage(spark, warc):
     ArrowEvalPython, no MapInArrow or literal-array exists(), no Exchange —
     for a list, for an RDD-backed frame (which has no size estimate), and
     in the library form that filters on the flag itself (a filter pushed
-    below the UDF would copy it into a second Python stage)."""
+    below the UDF would copy it into a second Python stage).  The WARC
+    read below it is the one other Python stage: one MapInPandas over a
+    JVM range, no scan of a Python-side RDD."""
     path, records = warc
     prefixes = CASES["overlapping"][0]
     _h, want, _st = make_cdx_lines(records, NAME, all_records=True,
@@ -121,7 +123,8 @@ def test_fused_exclude_plan_is_one_python_stage(spark, warc):
                lib):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("ArrowEvalPython") == 1, plan
-        for node in ("MapInArrow", "exists(", "Exchange"):
+        assert plan.count("MapInPandas") == 1, plan
+        for node in ("MapInArrow", "exists(", "Exchange", "ExistingRDD"):
             assert node not in plan, plan
     assert sorted(r[0] for r in lib.collect()) == sorted(want)
 
