@@ -72,8 +72,8 @@ SALT_PHASE_MIN_ROWS = 20_000_000
 # merge) up to this batch size, the distributed quota pop above it:
 # profiling at 400k-row frontiers showed TakeOrdered beats the quota pop
 # (which pays a full extra materialization) until k reaches several
-# hundred thousand.  The quota pop runs jobs at plan time, so plan
-# overlap (run_crawl) is off above this size.
+# hundred thousand.  The quota pop runs jobs at plan time, so above this
+# size crawl_step's plan phase is not job-free (ROADMAP item 5).
 TAKE_ORDERED_MAX_ROWS = 150_000
 # Compact the seen-set delta chain once it reaches this many parts, so
 # per-part scan/task overhead stays bounded: one O(total) pass amortized
@@ -611,45 +611,6 @@ class _AsyncSave:
             raise err
 
 
-class _AsyncPlan:
-    """One-shot background plan builder (driver-thread overlap).
-
-    Spark plan construction is py4j + Catalyst analysis work on the
-    driver; running it on a second thread while the main thread blocks
-    in the current generation's heavy job overlaps the loop's serial
-    plan term with executor compute.  Build errors are captured, not
-    raised — the caller falls back to a fresh foreground build (which
-    would surface any real defect)."""
-
-    def __init__(self, fn):
-        import threading
-        self.result = None
-        self.error: BaseException | None = None
-
-        def run():
-            try:
-                self.result = fn()
-            except BaseException as e:   # speculative: never kills the loop
-                self.error = e
-
-        self._t = threading.Thread(target=run, daemon=True)
-        self._t.start()
-
-    def join(self):
-        self._t.join()
-        return self.result
-
-
-def _gate_decisions(cfg: CrawlConfig, frontier_size: int | None) -> tuple:
-    """The two result-identical-optimization gates a crawl_step plan
-    bakes in from frontier_size.  Two sizes with equal decisions produce
-    interchangeable plans — the overlap-mode validation predicate."""
-    salt_on = frontier_size is None or frontier_size >= SALT_PHASE_MIN_ROWS
-    topk_skip = (frontier_size is not None
-                 and frontier_size <= cfg.global_batch)
-    return (salt_on, topk_skip)
-
-
 def _part_files(path: str) -> list[dict]:
     """Per-partition lineage entry for one written parquet artifact:
     the part files with their byte sizes, straight off the filesystem
@@ -1019,8 +980,6 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
     aqe_orig = spark.conf.get(aqe_key, "true")
     if emitted_keys is None and cfg.global_batch <= BROADCAST_BATCH_MAX_ROWS:
         spark.conf.set(aqe_key, "false")
-    pending: dict | None = None   # overlap-thread pre-built next plan
-    prev_in_size: int | None = None   # last generation's INPUT frontier size
     try:
         for gen in range(start_gen, generations):
             if filt is None and seen_count >= cfg.bloom_min_keys:
@@ -1032,30 +991,10 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
             prev_frontier_handle = frontier   # current gen's persisted frontier
             prev_frontier_delta = seen_parts[-1]   # lazy delta reading its blocks
             _t0 = time.perf_counter()
-            # a plan pre-built on the overlap thread last generation is
-            # used ONLY if every assumption it baked in still holds:
-            # same gate decisions under the ACTUAL frontier size, still no
-            # seen filter (it was built without one), no compaction.
-            # Otherwise it is discarded and the plan is rebuilt fresh —
-            # results identical either way.
-            if (pending is not None and pending["gen"] == gen
-                    and filt is None
-                    and pending["n_seen_parts"] == len(seen_parts)
-                    and pending["decisions"]
-                    == _gate_decisions(cfg, frontier_size)):
-                frontier, cdx, metrics = pending["result"]
-                metrics["plan_overlapped"] = True
-            else:
-                # a discarded speculative plan was never materialized —
-                # its lazy checkpoint marks hold no blocks; just drop it
-                frontier, cdx, metrics = crawl_step(
-                    pages, frontier, seen, robots, cfg, gen, bloom=filt,
-                    frontier_size=frontier_size,
-                    host_budgets=host_budgets,
-                    robots_rules=robots_rules_plan)
-                if pending is not None:
-                    metrics["overlap_discarded"] = True
-            pending = None
+            frontier, cdx, metrics = crawl_step(
+                pages, frontier, seen, robots, cfg, gen, bloom=filt,
+                frontier_size=frontier_size, host_budgets=host_budgets,
+                robots_rules=robots_rules_plan)
             _t1 = time.perf_counter()   # plan construction (+ fetch-bloom job)
             scratch = metrics.pop("_scratch", [])
             parsed_handle = metrics.pop("_parsed")
@@ -1068,92 +1007,14 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
             # observe() metrics.  This is the generation's ONLY heavy job:
             # selection, fetch, parse, discovery, filter check, exact
             # anti-join and union all materialize inside it.
-            #
-            # Plan overlap: while that job runs in THIS thread, a second
-            # driver thread pre-builds generation gen+1's plan against the
-            # lazy checkpoint handle (plan construction is pure driver
-            # py4j/Catalyst work; Spark supports concurrent submission) —
-            # the _AsyncSave pattern applied to the ~1-2s/generation
-            # driver-serial plan term (BENCH.md phase table).  Interleaved
-            # A/Bs at the 3-generation headline shape measured median
-            # +5.5% (3 pairs) and +4.7% (5 pairs; clean pairs +4..13%),
-            # a core-count-INDEPENDENT term, so the win grows with cluster
-            # size.  Eligible only while the plan runs no job (broadcast
-            # fetch, TakeOrdered top-k), no compaction is due, there is no
-            # resume guard, and no seen filter is live (its per-generation
-            # insert replaces the filter object, which would always
-            # invalidate the plan).
-            # An observe() records nothing under a lazy checkpoint
-            # (verified, BENCH.md), so this path takes the counts as two
-            # jobs instead: the materializing count() IS the heavy job,
-            # and the novel count re-reads the persisted blocks (~0.1s).
-            do_overlap = (
-                gen + 1 < generations
-                and emitted_keys is None
-                and cfg.global_batch <= TAKE_ORDERED_MAX_ROWS
-                and cfg.global_batch <= BROADCAST_BATCH_MAX_ROWS
-                and len(seen_parts) + 1 < SEEN_COMPACT_PARTS
-                and filt is None)
-            new_seen = None
-            if do_overlap:
-                frontier = frontier.localCheckpoint(eager=False)
-                new_seen = (frontier
-                            .where(F.col("generation") == gen + 1)
-                            .select("urlkey")
-                            .localCheckpoint(eager=False))
-                spec_seen = _union_all(seen_parts + [new_seen])
-                # speculated next-generation frontier size; validated at
-                # use.  The running job's output size is unknowable here,
-                # but frontier growth in the discovery phase is
-                # multiplicative (branching-factor), so extrapolating the
-                # last observed growth RATIO (fs^2 / fs_prev) tracks it;
-                # the ratio decays to 1 as the crawl saturates, and a
-                # misprediction only costs a discarded plan (the
-                # validation predicate compares gate DECISIONS under the
-                # actual size, so results are identical either way).
-                # Measured: the raw current-size guess strands the
-                # gen-1->2 plan on the wrong side of the top-k gate on
-                # both the headline shape (48k spec vs 78k actual) and
-                # the test world (68 vs 211); the ratio guess lands on
-                # the right side of every gate in both.
-                spec_fs = frontier_size
-                if prev_in_size:
-                    spec_fs = max(0, round(
-                        frontier_size * frontier_size / prev_in_size))
-                _ckpt = frontier
-
-                def _build(ckpt=_ckpt, sseen=spec_seen, g=gen + 1,
-                           fs=spec_fs):
-                    return crawl_step(
-                        pages, ckpt, sseen, robots, cfg, g,
-                        frontier_size=fs, host_budgets=host_budgets,
-                        robots_rules=robots_rules_plan)
-
-                plan_thread = _AsyncPlan(_build)
-                n_rows = frontier.count()           # the heavy job
-                vals = {"n": n_rows,
-                        "novel": frontier
-                        .where(F.col("generation") == gen + 1).count()}
-                res = plan_thread.join()
-                if res is not None:
-                    pending = {
-                        "gen": gen + 1, "result": res,
-                        # seen_parts gains this generation's delta below
-                        "n_seen_parts": len(seen_parts) + 1,
-                        "decisions": _gate_decisions(cfg, spec_fs),
-                    }
-                elif plan_thread.error is not None:
-                    metrics["overlap_error"] = repr(plan_thread.error)
-            else:
-                obs_f = Observation()
-                frontier = (frontier.observe(
-                    obs_f, F.count(F.lit(1)).alias("n"),
-                    F.sum(F.when(F.col("generation") == gen + 1, 1)
-                          .otherwise(0)).alias("novel"))
-                    .localCheckpoint(eager=True))
-                vals = obs_f.get
+            obs_f = Observation()
+            frontier = (frontier.observe(
+                obs_f, F.count(F.lit(1)).alias("n"),
+                F.sum(F.when(F.col("generation") == gen + 1, 1)
+                      .otherwise(0)).alias("novel"))
+                .localCheckpoint(eager=True))
+            vals = obs_f.get
             _t2 = time.perf_counter()   # the heavy frontier job
-            prev_in_size = frontier_size
             frontier_size = int(vals["n"])
             metrics["frontier_size"] = frontier_size
             metrics["novel"] = int(vals["novel"] or 0)
@@ -1172,19 +1033,17 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
                 # already-emitted URLs).  parsed is persisted by now, so
                 # this is a projection + anti-join over it, resume-only.
                 metrics["cdx_rows"] = cdx.count()
-            if new_seen is None:
-                # the seen delta: this generation's novel entries, read off
-                # the frontier snapshot (they are exactly the
-                # generation==gen+1 rows), as a LAZY checkpoint — its first
-                # consumer (the next generation's anti-join, or this
-                # generation's checkpoint write / filter insert)
-                # materializes the compact key list in-line, after which
-                # the seen chain reads these small blocks instead of
-                # re-filtering every retained full-frontier snapshot per
-                # generation (measured ~2x on the 3-generation loop), and
-                # the superseded frontier snapshot is freed on schedule
-                new_seen = (frontier.where(F.col("generation") == gen + 1)
-                            .select("urlkey").localCheckpoint(eager=False))
+            # the seen delta: this generation's novel entries, read off
+            # the frontier snapshot (they are exactly the generation==gen+1
+            # rows), as a LAZY checkpoint — its first consumer (the next
+            # generation's anti-join, or this generation's checkpoint
+            # write / filter insert) materializes the compact key list
+            # in-line, after which the seen chain reads these small blocks
+            # instead of re-filtering every retained full-frontier snapshot
+            # per generation (measured ~2x on the 3-generation loop), and
+            # the superseded frontier snapshot is freed on schedule
+            new_seen = (frontier.where(F.col("generation") == gen + 1)
+                        .select("urlkey").localCheckpoint(eager=False))
             seen_parts.append(new_seen)
             seen_handles.append(new_seen)
             compact_old: list | None = None
@@ -1295,7 +1154,5 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
             saver.join()
         finally:
             spark.conf.set(aqe_key, aqe_orig)
-    all_cdx = cdx_parts[0] if cdx_parts else None
-    for c in cdx_parts[1:]:
-        all_cdx = all_cdx.unionByName(c)
+    all_cdx = _union_all(cdx_parts) if cdx_parts else None
     return frontier, seen, all_cdx, all_metrics

@@ -41,7 +41,9 @@ def per_context(build):
     relaunched in a long-lived process, a module-level cache would serve
     stale handles that fail opaquely, so the memo is dropped whenever the
     context object changes.  ``args`` must be hashable.  Thread-safe:
-    the crawl plans a generation on a second thread."""
+    library callers may build plans from several driver threads (Spark
+    supports concurrent job submission), and each must get the one memo
+    entry, not a second build racing the first."""
     memo: dict = {}
     key_ctx: list = [object()]     # no context matches the initial key
     lock = threading.RLock()

@@ -1,13 +1,17 @@
 #!/usr/bin/env python3
-"""Interleaved A/B of the crawl loop between two CrawlConfig overrides
-(SAME repo code, two live JVMs at the same core count).  Pairs alternate
-A/B in the same host window, each side best-of-2, so minute-scale host
-drift cancels pairwise (BENCH.md protocol).
+"""Interleaved A/B of the crawl loop between two CrawlConfig overrides,
+or between two repo checkouts: two live JVMs at the same core count.
+Each pair runs both sides in the same host window, each side best-of-2,
+and the side that runs first alternates, so minute-scale host drift
+cancels pairwise and favours neither side (BENCH.md protocol).  Side B
+always runs this checkout; side A runs REPO_A (default: this checkout).
 
 Usage:
-  python scripts/ab_cfg.py CORES N_PAGES BATCH GENS PAIRS CFG_A CFG_B [SEEDS]
+  python scripts/ab_cfg.py CORES N_PAGES BATCH GENS PAIRS CFG_A CFG_B [SEEDS] [REPO_A]
 e.g. the seen filter engaged from key 1 against the exact anti-join alone:
   python scripts/ab_cfg.py 4 100000 25000 3 5 '{}' '{"bloom_min_keys": 1}'
+or one production-shaped generation, an older checkout against this one:
+  python scripts/ab_cfg.py 16 1600000 400000 1 3 '{}' '{}' 400000 OLD_REPO
 """
 
 from __future__ import annotations
@@ -65,10 +69,10 @@ def one():
     dt = time.time() - t0
     d = [b - a for a, b in zip(s0, stat())]
     tot = sum(m["scheduled"] + m["novel"] for m in metrics)
+    phases = {{k: round(sum(m["wall_phases"][k] for m in metrics), 3)
+              for k in ("plan", "job", "post")}}
     return {{"urls_per_sec": round(tot / dt, 1), "wall": round(dt, 2),
-             "cdx": n_cdx,
-             "overlapped_gens": sum(1 for m in metrics
-                                    if m.get("plan_overlapped")),
+             "cdx": n_cdx, "phases": phases,
              "steal_frac": round(d[7] / max(100.0 * os.cpu_count() * dt, 1),
                                  4)}}
 
@@ -129,16 +133,20 @@ def main():
     seeds = (int(sys.argv[8]) if len(sys.argv) > 8
              else max(500, n_pages // 10))
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r_a = Runner(repo, "A", cores, n_pages, batch, gens, cfg_a, seeds)
+    repo_a = os.path.abspath(sys.argv[9]) if len(sys.argv) > 9 else repo
+    r_a = Runner(repo_a, "A", cores, n_pages, batch, gens, cfg_a, seeds)
     r_a.ready()
     r_b = Runner(repo, "B", cores, n_pages, batch, gens, cfg_b, seeds)
     r_b.ready()
-    a_runs, b_runs, speedups = [], [], []
-    for _ in range(pairs):
-        a = max(r_a.run(), r_a.run(), key=lambda r: r["urls_per_sec"])
-        b = max(r_b.run(), r_b.run(), key=lambda r: r["urls_per_sec"])
+    a_runs, b_runs, speedups, first = [], [], [], []
+    for i in range(pairs):
+        order = (r_a, r_b) if i % 2 == 0 else (r_b, r_a)
+        best = {r: max(r.run(), r.run(), key=lambda x: x["urls_per_sec"])
+                for r in order}
+        a, b = best[r_a], best[r_b]
         a_runs.append(a)
         b_runs.append(b)
+        first.append("A" if i % 2 == 0 else "B")
         speedups.append(round(b["urls_per_sec"] / a["urls_per_sec"], 3))
     r_a.quit()
     r_b.quit()
@@ -146,7 +154,8 @@ def main():
         "A/B output row counts diverge — not comparing the same work"
     print(json.dumps({
         "cores": cores, "n_pages": n_pages, "batch": batch, "gens": gens,
-        "seeds": seeds, "cfg_a": cfg_a, "cfg_b": cfg_b,
+        "seeds": seeds, "repo_a": repo_a, "repo_b": repo,
+        "cfg_a": cfg_a, "cfg_b": cfg_b, "first": first,
         "a": a_runs, "b": b_runs, "pair_speedups_b_over_a": speedups,
         "median_speedup": round(statistics.median(speedups), 3),
     }))

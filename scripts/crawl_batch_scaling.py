@@ -8,7 +8,8 @@ wall barely moves with cores (BENCH.md).  This script measures the SAME
 loop at a production-shaped batch (one generation, 4x the batch over a
 4x web) at N and 4N cores, interleaved pairs, best-of-2 per side — the
 direct test of the claim that crawl scaling is batch-size-bound, not
-design-bound.
+design-bound.  Each JVM gets ab_cfg.py's pre-touched heap (a quarter of
+RAM, at most 12 GiB), so both fit the host at once.
 
 Usage: python scripts/crawl_batch_scaling.py [n_pages] [batch] [lo] [hi] [pairs]
 Prints one JSON line; BENCH.md consumes the numbers manually.
@@ -22,12 +23,12 @@ import statistics
 import subprocess
 import sys
 
-JVM_OPTS = "-Xms12g -XX:+AlwaysPreTouch -XX:+UseParallelGC"
+from ab_cfg import HEAP, JVM_OPTS
 
 CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
-os.environ["SPARK_GRAFT_DRIVER_MEM"] = "12g"
+os.environ["SPARK_GRAFT_DRIVER_MEM"] = {heap!r}
 from cdx_writer_spark.session import get_spark
 from cdx_writer_spark.sources.synth import synth_pages, synth_robots, synth_seeds
 from cdx_writer_spark.frontier.crawl import CrawlConfig, run_crawl
@@ -59,7 +60,9 @@ def one():
     d = [b - a for a, b in zip(s0, stat())]
     tot = sum(m["scheduled"] + m["novel"] for m in metrics)
     return {{"urls_per_sec": round(tot / dt, 1), "wall": round(dt, 2),
-             "cdx": n_cdx, "steal_frac": round(d[7] / max(3200.0 * dt, 1), 4)}}
+             "cdx": n_cdx,
+             "steal_frac": round(d[7] / max(100.0 * os.cpu_count() * dt, 1),
+                                 4)}}
 
 one()  # untimed warm
 print("READY", flush=True)
@@ -77,7 +80,7 @@ class Runner:
         self.p = subprocess.Popen(
             [sys.executable, "-u", "-c",
              CHILD.format(repo=repo, cores=cores, n_pages=n_pages,
-                          batch=batch, jvm_opts=JVM_OPTS)],
+                          batch=batch, jvm_opts=JVM_OPTS, heap=HEAP)],
             cwd=repo, text=True, stdin=subprocess.PIPE,
             stdout=subprocess.PIPE, stderr=subprocess.DEVNULL)
 

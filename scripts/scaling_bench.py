@@ -7,7 +7,8 @@ Methodology hardened against this host's measured pathologies:
 
 * JVM heap pre-sized and pre-touched (-Xms -XX:+AlwaysPreTouch): heap
   growth during the first heavy stage otherwise burns 400+ CPU-seconds
-  of kernel time zeroing pages inside the timed window.
+  of kernel time zeroing pages inside the timed window.  The size is
+  ab_cfg.py's (a quarter of RAM, at most 12 GiB), so both JVMs fit.
 * Both JVMs stay alive for the whole session and timed runs are
   INTERLEAVED in (N, 4N) pairs — host capacity drifts on a minutes
   timescale (bursty steal from neighbors), so sequential N-then-4N
@@ -45,12 +46,12 @@ import statistics
 import subprocess
 import sys
 
-JVM_OPTS = "-Xms12g -XX:+AlwaysPreTouch -XX:+UseParallelGC"
+from ab_cfg import HEAP, JVM_OPTS
 
 CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
-os.environ["SPARK_GRAFT_DRIVER_MEM"] = "12g"
+os.environ["SPARK_GRAFT_DRIVER_MEM"] = {heap!r}
 from cdx_writer_spark.session import get_spark
 from bench import crawl_bench, materialize, synth_warc_records
 from cdx_writer_spark.operators.cdx import cdx_fields, cdx_lines
@@ -86,7 +87,8 @@ for line in sys.stdin:
             r = crawl_bench(spark, {n_pages}, generations={gens})
             d = [b - a for a, b in zip(s0, stat())]
             r["steal_jif"] = d[7]
-            r["steal_frac"] = round(d[7] / max(3200.0 * r["crawl_sec"], 1), 4)
+            r["steal_frac"] = round(
+                d[7] / max(100.0 * os.cpu_count() * r["crawl_sec"], 1), 4)
             runs.append(r)
         best = max(runs, key=lambda r: r["urls_per_sec"])
         best["all_runs_urls_per_sec"] = [r["urls_per_sec"] for r in runs]
@@ -102,7 +104,8 @@ class Runner:
     def __init__(self, cores: int, n_records: int, n_pages: int, gens: int,
                  repo: str):
         code = CHILD.format(repo=repo, cores=cores, n_records=n_records,
-                            n_pages=n_pages, gens=gens, jvm_opts=JVM_OPTS)
+                            n_pages=n_pages, gens=gens, jvm_opts=JVM_OPTS,
+                            heap=HEAP)
         self.cores = cores
         self.p = subprocess.Popen(
             [sys.executable, "-u", "-c", code], cwd=repo, text=True,
@@ -192,9 +195,9 @@ def main():
 
     # steal stratification: a pair is CLEAN when hypervisor steal in BOTH
     # sides' best windows stayed under 2% of host CPU time (/proc/stat is
-    # host-wide: 32 cpus x 100 jiffies/sec)
+    # host-wide: every cpu x 100 jiffies/sec)
     def _steal_frac(r):
-        return r["steal_jif"] / max(3200.0 * r["wall"], 1.0)
+        return r["steal_jif"] / max(100.0 * os.cpu_count() * r["wall"], 1.0)
     clean_effs = [e for e, a, b in zip(pair_effs, lo_runs, hi_runs)
                   if _steal_frac(a) < 0.02 and _steal_frac(b) < 0.02]
     clean_eff = round(statistics.median(clean_effs), 3) if clean_effs else None

@@ -1047,53 +1047,34 @@ def test_frontier_top_priority_ties_across_file_boundaries(spark, tmp_path):
         assert got == want, f"two-level frontier diverges at n={n}"
 
 
-def test_overlap_plan_parity_and_engagement(spark, world):
-    """run_crawl pre-builds generation g+1's plan on a second driver
-    thread while g's job runs.  Results must equal the reference
-    simulator's (seen, cdx, frontier), the speculative plan must
-    actually engage (non-vacuous), and a loop that invalidates the
-    speculation (filter rebuilt every generation) must fall back to
-    fresh builds with the same results."""
-    from tests.test_crawl_simulator import simulate_crawl
+def test_generation_job_count_pinned(spark, world):
+    """crawl_step's contract is one heavy job plus a count per
+    generation, plus the small broadcast jobs its plan runs.  Pin the
+    Spark job count of one steady-state generation: a fresh 3-generation
+    crawl's jobs minus a fresh 2-generation crawl's, each counted under
+    its own job group with statusTracker.  Here that generation runs 6:
+    the heavy frontier checkpoint, the parsed-block count, three
+    broadcast builds, and the count ensure_checkpointed spends on the
+    previous generation's seen delta, which the heavy job left
+    unmaterialized."""
     pages, seeds, robots = world
-    base = dict(per_host_budget=2, global_batch=200)
-    gens = 3
-
-    def run(cfg):
-        f, seen, cdx, m = run_crawl(spark, pages, seeds, robots, cfg, gens)
-        return (sorted(r["urlkey"] for r in seen.collect()),
-                sorted((r["urlkey"], r["generation"]) for r in cdx.collect()),
-                sorted(tuple(r) for r in f.collect()), m)
-
-    cfg = CrawlConfig(**base)
-    sim_cdx, sim_seen, sim_frontier = simulate_crawl(
-        pages.select("url", "warc_ts", "html").collect(), seeds.collect(),
-        robots.collect(), cfg, gens)
-    want = (sorted(sim_seen), sorted((r[0], r[10]) for r in sim_cdx),
-            sorted((k, u, h, p, g)
-                   for k, (p, u, h, g) in sim_frontier.items()))
-
-    ovl = run(cfg)
-    assert ovl[:3] == want, "overlapped crawl diverges from simulator"
-    assert any(m.get("plan_overlapped") for m in ovl[3]), \
-        "vacuous: no generation used a pre-built plan"
-    # growth-aware frontier-size speculation (extrapolating the last
-    # observed growth ratio): on this deterministic world BOTH eligible
-    # generations (1 and 2, pre-built while 0 and 1 ran) must land on
-    # the right side of every gate and engage — a raw current-size
-    # guess strands plans that cross the top-k/salt boundaries
-    assert sum(bool(m.get("plan_overlapped")) for m in ovl[3]) == 2, \
-        f"expected both eligible generations to use pre-built plans: " \
-        f"{[(m.get('plan_overlapped'), m.get('overlap_discarded')) for m in ovl[3]]}"
-
-    # seen filter live from the first key: its per-generation insert
-    # replaces the filter object, so no generation may use (or build) a
-    # speculative plan, and the results must still match
-    ovl_b = run(CrawlConfig(bloom_min_keys=1, **base))
-    assert ovl_b[:3] == want, \
-        "crawl diverges from simulator under live-filter maintenance"
-    assert not any(m.get("plan_overlapped") for m in ovl_b[3]), \
-        "a generation overlapped while the seen filter was live"
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    cfg = CrawlConfig(per_host_budget=2, global_batch=200)
+    props = ("spark.jobGroup.id", "spark.job.description",
+             "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in props}
+    jobs = {}
+    try:
+        for gens in (2, 3):
+            group = f"crawl-job-count-{gens}"
+            sc.setJobGroup(group, f"{gens}-generation crawl")
+            run_crawl(spark, pages, seeds, robots, cfg, gens)
+            jobs[gens] = len(st.getJobIdsForGroup(group))
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    assert jobs[3] - jobs[2] == 6, jobs
 
 
 def test_sharded_cuckoo_overflow_recognised_through_spark(spark):
